@@ -213,10 +213,14 @@ object Bench {
     def failedJson(names: Seq[String]): String =
       names.map("\"" + _ + "\"").mkString("[", ",", "]")
     // contended if EITHER bracket was hot: a capture that started clean
-    // and ended hot still has its late-alphabet queries inflated
-    val contended = contendedStart || isContended(canaryEnd, loadAfter)
+    // and ended hot still has its late-alphabet queries inflated. A
+    // failed canary (the -1 sentinel) leaves contention unknown, so the
+    // flag is null rather than a false "clean"
+    val canaryOk = canaryStart >= 0 && canaryEnd >= 0
+    val contended =
+      if (canaryOk) (contendedStart || isContended(canaryEnd, loadAfter)).toString else "null"
     val pw = new java.io.PrintWriter(detailFile, "UTF-8")
-    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
     finally pw.close()
     val slow = results.sortBy(-_._2).take(25)
       .map { case (k, v, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
@@ -226,7 +230,7 @@ object Bench {
     // precisely when the marker matters most; failed_count carries the
     // true total and the sidecar the full list.
     val failedShown = failedJson(failedNames.take(8))
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
     spark.stop()
   }
 }

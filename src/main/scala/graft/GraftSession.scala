@@ -21,9 +21,9 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
       // type for; read as long ns and convert via Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reclaim reliable checkpoints (Dedup.clusters writes one per CC
-      // round) once their RDDs are GC'd — without this they accumulate
-      // for the life of the app
+      // reclaim reliable checkpoints (Dedup.clusters' distributed path
+      // writes one per CC round) once their RDDs are GC'd — without this
+      // they accumulate for the life of the app
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

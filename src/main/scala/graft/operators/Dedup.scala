@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 
 /** Document deduplication for training-data pipelines.
@@ -306,10 +309,25 @@ object Dedup {
         expr("(li * 1000000L) div (la + lb - li)").as("jac_ppm"))
   }
 
-  /** Connected components over a near-dup pair graph: iterative min-label
-    * propagation until fixpoint. cluster_id = smallest doc id reachable —
-    * the canonical representative each non-canonical doc collapses to.
+  /** Connected components over a near-dup pair graph. cluster_id =
+    * smallest doc id reachable — the canonical representative each
+    * non-canonical doc collapses to. A pair with a null id names no
+    * document and is dropped first, so no output row has a null doc_id.
     *
+    * Two paths give the same components; a size rule picks one. The pair
+    * graph becomes a persisted symmetric edge table (two ids per row). A
+    * bounded probe reads at most `spark.sql.autoBroadcastJoinThreshold /
+    * 16` + 1 of its rows — Spark's own "small enough to ship whole" test,
+    * at 16 bytes a row (two 8-byte ids). When the probe got the whole
+    * table and the ids are Long or Int, a union-find over primitive arrays
+    * finishes on the driver ([[driverComponents]]): a fixed few jobs,
+    * whatever the diameter. Otherwise (a larger graph, other id types, or
+    * a threshold ≤ 0, Spark's "never broadcast") the min-label
+    * propagation rounds below run on the same persisted edges the probe
+    * filled, so the pair plan is computed once either way. `maxIter`,
+    * `doubling` and `reliableCkpt` govern only that distributed path.
+    *
+    * Distributed path: iterative min-label propagation until fixpoint.
     * Each iteration is exactly ONE join + one aggregate shuffle: the
     * neighbor-label contributions (edges ⋈ labels) union each node's own
     * label, and a single groupBy computes both the new label (min over
@@ -353,7 +371,77 @@ object Dedup {
   def clusters(pairs: DataFrame, maxIter: Int = 20,
                doubling: Boolean = false,
                reliableCkpt: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
+    val live = pairs.where(col("doc_a").isNotNull && col("doc_b").isNotNull)
+    // no distinct: ngram/simhash/embedding pair generators emit unique
+    // (a<b) pairs, so the two directions cannot collide — and min-label
+    // propagation is duplicate-insensitive anyway, so the dedup shuffle
+    // would be pure overhead even for callers that do pass dups
+    val edges = live.select(col("doc_a").as("u"), col("doc_b").as("v"))
+      .union(live.select(col("doc_b").as("u"), col("doc_a").as("v")))
+      .persist()
+    val maxEdges = math.min(
+      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 16, Int.MaxValue - 1L)
+    val idType = edges.schema("u").dataType
+    // bounded probe: at most maxEdges + 1 rows, read from the persisted
+    // edges (the job that fills the cache the rounds would read anyway)
+    val probe =
+      if (maxEdges > 0 && (idType == LongType || idType == IntegerType))
+        Some(edges.select(col("u").cast(LongType), col("v").cast(LongType))
+          .limit(maxEdges.toInt + 1).collect())
+      else None
+    val out = probe.filter(_.length <= maxEdges) match {
+      case Some(rows) => driverComponents(edges.sparkSession, rows, idType)
+      case None => propagate(edges, maxIter, doubling, reliableCkpt)
+    }
+    edges.unpersist()
+    out
+  }
+
+  /** The driver path of [[clusters]]: union-find over the whole symmetric
+    * edge table (`rows` of (u, v) longs). Node ids sit in a sorted
+    * primitive array (every node is the `u` of some row); a union always
+    * links the larger root under the smaller, so each root is its
+    * component's smallest id — the label the propagation fixpoint
+    * reaches. The result is a local relation with the distributed path's
+    * column names and id type.
+    */
+  private def driverComponents(spark: SparkSession, rows: Array[Row],
+                               idType: DataType): DataFrame = {
+    val us = rows.map(_.getLong(0))
+    val ids = us.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (e <- rows.indices) {
+      val a = find(index(us(e)))
+      val b = find(index(rows(e).getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val out = (0 until n).map { i =>
+      val (id, label) = (ids(i), ids(find(i)))
+      if (idType == IntegerType) Row(id.toInt, label.toInt) else Row(id, label)
+    }
+    // nullability as the propagation rounds leave it: node ids come from
+    // null-filtered pairs, labels from an aggregate min
+    val schema = StructType(Seq(StructField("doc_id", idType, nullable = false),
+      StructField("cluster_id", idType, nullable = true)))
+    spark.createDataFrame(out.asJava, schema)
+  }
+
+  /** The distributed path of [[clusters]]: checkpointed min-label rounds
+    * over the persisted symmetric `edges` (see [[clusters]] for the loop's
+    * contract).
+    */
+  private def propagate(edges: DataFrame, maxIter: Int, doubling: Boolean,
+                        reliableCkpt: Boolean): DataFrame = {
+    val spark = edges.sparkSession
     // stats-resetting barriers ([[Barrier]]): with doubling=true the
     // halving step SELF-JOINS the label table, and a raw checkpoint's
     // carried size estimate would square per round — 2^rounds bits of
@@ -385,13 +473,6 @@ object Dedup {
         "graft.Dedup.clusters: set spark.cleaner.referenceTracking." +
           "cleanCheckpoints=true to reclaim per-round checkpoint dirs")
     }
-    // no distinct: ngram/simhash/embedding pair generators emit unique
-    // (a<b) pairs, so the two directions cannot collide — and min-label
-    // propagation is duplicate-insensitive anyway, so the dedup shuffle
-    // would be pure overhead even for callers that do pass dups
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .persist()
     // round 1 fused into initialization: with label(v) = v initially the
     // first propagation is just min(u, min(neighbors)) — one aggregate,
     // no join, no separate identity-labels materialization
@@ -409,13 +490,12 @@ object Dedup {
       val next = barrier(if (doubling) halveRound(prop) else prop)
       // cheap scan of the checkpointed output — not a recompute; coalesce
       // covers the empty-graph case (max over zero rows is null)
-      changed = next.agg(coalesce(max(col("chg")), lit(false))).first.getBoolean(0)
+      changed = next.agg(coalesce(max(col("chg")), lit(false))).first().getBoolean(0)
       labels = next.drop("chg")
       if (dbg) println(f"[cc] round $iter chg=$changed " +
         f"${(System.nanoTime() - tR) / 1e9}%.2f")
       iter += 1
     }
-    edges.unpersist()
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
 

@@ -76,7 +76,7 @@ object Spatial {
 
   /** Full DBSCAN cluster assignment: connected components over the
     * core–core in-radius graph (cluster id = smallest core id in the
-    * component, via [[Dedup.clusters]]' checkpointed min-label loop),
+    * component, via [[Dedup.clusters]]),
     * then each border point attaches to the smallest cluster id among
     * its core neighbors — the standard deterministic tie-break for the
     * inherently order-dependent border rule. Noise points are dropped.

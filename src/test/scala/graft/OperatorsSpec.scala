@@ -279,6 +279,14 @@ class OperatorsSpec extends SparkSpec {
     assert(Dedup.clusters(empty).count() === 0)
   }
 
+  test("clusters drops pairs with a null id instead of emitting a null doc_id") {
+    val pairs = Seq((Some(1L), None), (Some(5L), None), (Some(7L), Some(8L)))
+      .toDF("doc_a", "doc_b")
+    def rows() = Dedup.clusters(pairs).collect().map(r => (r.get(0), r.get(1))).toSet
+    assert(rows() === Set((7L, 7L), (8L, 7L)), "driver path")
+    assert(distributedCC(rows()) === Set((7L, 7L), (8L, 7L)), "distributed path")
+  }
+
   test("bernoulli keeps null-key rows (sentinel draw) instead of dropping them") {
     val df = Seq(Some(1L), Some(2L), None).toDF("k")
     val kept = operators.Sampling.bernoulli(df, col("k"), 1.0, "nulltest").count()
@@ -1141,11 +1149,86 @@ class OperatorsSpec extends SparkSpec {
   test("clusters with doubling converges on a 64-node path in O(log d) rounds") {
     import graft.operators.Dedup
     // diameter-63 path: one-hop propagation needs ~62 rounds; the
-    // path-halving variant must finish (and prove convergence) in <12
+    // path-halving variant must finish (and prove convergence) in <12.
+    // Rounds exist only on the distributed path, so force it.
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusters(edges, maxIter = 12, doubling = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val got = distributedCC(Dedup.clusters(edges, maxIter = 12, doubling = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted)
     assert(got.toSeq === (0L to 63L).map(i => (i, 0L)))
+  }
+
+  test("clusters on a small graph runs a fixed few Spark jobs, not per-round barriers") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // under the default conf a 64-node path is far below the size rule's
+    // budget: the driver path's bounded probe (fill the edge cache, read
+    // it back), never one-hop rounds of checkpoint + probe jobs
+    val sc = spark.sparkContext
+    val group = s"cc-job-count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    sc.addSparkListener(listener)
+    val got =
+      try {
+        sc.setJobGroup(group, "Dedup.clusters job count")
+        try Dedup.clusters(edges).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.graft.ListenerBusDrain.drain(sc, 10000L)
+        sc.removeSparkListener(listener)
+      }
+    assert(got.toSeq === (0L to 63L).map(i => (i, 0L)))
+    assert(jobs.get() <= 3, s"Dedup.clusters on a 64-node path ran ${jobs.get()} jobs")
+  }
+
+  test("clusters: driver union-find, distributed rounds and a BFS reference agree") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def bfs(g: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val adj = (g ++ g.map(_.swap)).groupMap(_._1)(_._2)
+      adj.keySet.map { s =>
+        var seen = Set(s)
+        var frontier = Seq(s)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(adj).distinct.filterNot(seen)
+          seen ++= frontier
+        }
+        (s, seen.min)
+      }
+    }
+    val chain = (1L until 10L).map(i => (i, i + 1))
+    val star = (1L to 6L).map(i => (40L, 40L + 3 * i))
+    val clique = for (a <- 60L to 64L; b <- 60L to 64L if a < b) yield (a, b)
+    val graphs: Seq[(String, Seq[(Long, Long)])] = Seq(
+      "empty" -> Seq.empty,
+      "chain" -> chain,
+      "reversed chain" -> chain.map(_.swap).reverse,
+      "star" -> star,
+      "clique" -> clique,
+      "disjoint components" -> (chain ++ star ++ clique),
+      "duplicate and reversed edges" -> Seq((5L, 6L), (6L, 5L), (5L, 6L), (9L, 6L), (9L, 6L)),
+      "self-loops" -> Seq((3L, 3L), (4L, 4L), (4L, 9L), (9L, 9L)))
+    def rows(out: DataFrame): Set[(Long, Long)] = out.collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
+    def isLocal(out: DataFrame): Boolean =
+      out.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    for ((name, g) <- graphs; ints <- Seq(false, true); doubling <- Seq(false, true)) {
+      val pairs =
+        if (ints) g.map { case (a, b) => (a.toInt, b.toInt) }.toDF("doc_a", "doc_b")
+        else g.toDF("doc_a", "doc_b")
+      val what = s"$name (ints=$ints, doubling=$doubling)"
+      val driver = Dedup.clusters(pairs, doubling = doubling)
+      val dist = distributedCC(Dedup.clusters(pairs, doubling = doubling))
+      assert(isLocal(driver) && !isLocal(dist), s"$what: wrong path taken")
+      assert(driver.schema.map(_.dataType) === dist.schema.map(_.dataType), what)
+      val ref = bfs(g)
+      assert(rows(driver) === ref, s"$what: driver path")
+      assert(rows(dist) === ref, s"$what: distributed path")
+    }
   }
 
   test("dbscanCluster assigns components, borders, and singleton cores") {

@@ -179,13 +179,14 @@ class ScaleContractSpec extends SparkSpec {
       sampler.start()
       def run(): Unit = {
         // a 9-node path needs several doubling rounds => several
-        // per-round checkpoint dirs
+        // per-round checkpoint dirs (on the distributed path: the size
+        // rule would finish a graph this small on the driver)
         val pairs = (1L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
         val out = operators.Dedup.clusters(pairs, doubling = true)
         assert(out.collect().forall(_.getLong(1) == 1L))
         rddDirs().foreach(seen.put(_, true))
       }
-      run()
+      distributedCC(run())
       sampling = false
       sampler.join(2000)
       assert(seen.size >= 2,

@@ -13,4 +13,17 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` on the distributed (propagation-round) path of
+    * `Dedup.clusters`, whose size rule otherwise finishes small graphs on
+    * the driver: broadcasting is turned off, then the prior value is put
+    * back (or the conf unset if it had none).
+    */
+  def distributedCC[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
