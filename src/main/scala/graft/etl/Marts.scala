@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.SizeRule
 
 /** BI-mart operators (reference: etl_imdb.py:196–235): grouped KPIs,
   * (thresholded) top-N per group, fixed-width histograms.
@@ -10,12 +11,18 @@ import org.apache.spark.sql.functions._
 object Marts {
 
   /** Grouped KPI aggregate — count/avg/sum per group key
-    * (reference: etl_imdb.py:196 `build_mart_year_kpi`). Spark's hash
-    * aggregate does map-side partial aggregation, so the shuffle carries
-    * only (group, partial state) regardless of input size.
+    * (reference: etl_imdb.py:196 `build_mart_year_kpi`). Two paths, picked
+    * by [[SizeRule]]: when the leaves `df` reads fit
+    * `spark.sql.autoBroadcastJoinThreshold`, the input runs as one
+    * partition and the aggregate (and a caller's `orderBy`) plans no
+    * exchange — one Spark job for an interactive lookup. Otherwise
+    * Spark's hash aggregate does map-side partial aggregation, so the
+    * shuffle carries only (group, partial state) regardless of input
+    * size. The paths can differ in the last bits of a floating `avg`
+    * (summation order), never in keys or counts.
     */
   def kpiByGroup(df: DataFrame, group: Column, as: String, aggs: Seq[Column]): DataFrame =
-    df.groupBy(group.as(as)).agg(aggs.head, aggs.tail: _*)
+    SizeRule.onePartition(df).groupBy(group.as(as)).agg(aggs.head, aggs.tail: _*)
 
   /** Top-N rows per group under a TOTAL order (callers must include a
     * unique tie-break column — the reference ranks by `num_votes` alone,
@@ -23,14 +30,19 @@ object Marts {
     * Optional pre-filter = the reference's `--min-votes` threshold
     * (etl_imdb.py:217).
     *
-    * Scale: row_number over (group, order) is one shuffle; with AQE a
-    * skewed group splits into multiple reducers only for the pre-rank sort.
-    * For small N a per-partition top-N pre-prune would cut the exchange —
-    * noted as a future custom operator.
+    * Scale: two paths, picked by [[SizeRule]] on the pre-filtered input.
+    * When its leaves fit `spark.sql.autoBroadcastJoinThreshold` it runs
+    * as one partition: the window (and a caller's `orderBy`) plans no
+    * exchange, so a small lookup is one job plus any broadcast of its
+    * join. Otherwise row_number over (group, order) is one shuffle; with
+    * AQE a skewed group splits into multiple reducers only for the
+    * pre-rank sort. Under the total order both paths return the same
+    * rows. For small N a per-partition top-N pre-prune would cut the
+    * exchange — noted as a future custom operator.
     */
   def topNPerGroup(df: DataFrame, groups: Seq[Column], order: Seq[Column], n: Int,
                    preFilter: Option[Column] = None): DataFrame = {
-    val base = preFilter.map(df.filter).getOrElse(df)
+    val base = SizeRule.onePartition(preFilter.map(df.filter).getOrElse(df))
     val w = Window.partitionBy(groups: _*).orderBy(order: _*)
     base.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= n)
   }

@@ -316,10 +316,12 @@ object Dedup {
     *
     * Two paths give the same components; a size rule picks one. The pair
     * graph becomes a persisted symmetric edge table (two ids per row). A
-    * bounded probe reads at most `spark.sql.autoBroadcastJoinThreshold /
-    * 16` + 1 of its rows — Spark's own "small enough to ship whole" test,
-    * at 16 bytes a row (two 8-byte ids). When the probe got the whole
-    * table and the ids are Long or Int, a union-find over primitive arrays
+    * bounded probe reads at most [[SizeRule.driverEdges]] + 1 of its rows
+    * — Spark's own "small enough to ship whole" test,
+    * `spark.sql.autoBroadcastJoinThreshold` at 16 bytes a row (two 8-byte
+    * ids), capped by the driver heap at [[SizeRule.DriverRowBytes]] a
+    * row. When the probe got the whole table and the ids are Long or
+    * Int, a union-find over primitive arrays
     * finishes on the driver ([[driverComponents]]): a fixed few jobs,
     * whatever the diameter. Otherwise (a larger graph, other id types, or
     * a threshold ≤ 0, Spark's "never broadcast") the min-label
@@ -379,8 +381,7 @@ object Dedup {
     val edges = live.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(live.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist()
-    val maxEdges = math.min(
-      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 16, Int.MaxValue - 1L)
+    val maxEdges = SizeRule.driverEdges(pairs.sparkSession)
     val idType = edges.schema("u").dataType
     // bounded probe: at most maxEdges + 1 rows, read from the persisted
     // edges (the job that fills the cache the rounds would read anyway)

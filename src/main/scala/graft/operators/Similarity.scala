@@ -112,6 +112,14 @@ object Similarity {
     * equi-join on the cell id (the query side fans out ×nprobe, the
     * corpus side never replicates). `nprobe` is the recall/cost knob:
     * nprobe = cents degrades gracefully to exact brute force.
+    *
+    * Two plans, picked by [[SizeRule]]: when the leaves of `queries` and
+    * `corpus` together fit `spark.sql.autoBroadcastJoinThreshold`, both
+    * join inputs run as one partition and the cell join hashes the query
+    * side in the same task, so neither the join nor the per-query rank
+    * window plans an exchange or a broadcast: an interactive top-k is one
+    * Spark job. Larger inputs keep the distributed join and a query-keyed
+    * window. Both return the same rows.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               k: Int, cents: Int = 8, dims: Int = 64, nprobe: Int = 1): DataFrame =
@@ -119,23 +127,31 @@ object Similarity {
 
   /** [[ivfTopK]] against an arbitrary (e.g. [[kmeansFit]]-trained)
     * centroid matrix — the production shape: train the coarse quantizer,
-    * then search with it.
+    * then search with it. Same size rule and two plans as [[ivfTopK]].
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   k: Int, ws: Seq[Seq[Double]], nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1 && nprobe <= ws.size, s"nprobe must be in [1, ${ws.size}]")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       V.norm(col(vecCol)).as("qn"),
       explode(probeCells(col(vecCol), ws, nprobe)).as("cell"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
-      V.norm(col(vecCol)).as("nn"), cellFor(col(vecCol), ws).as("cell"))
+    val c0 = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
+      cellFor(col(vecCol), ws).as("cell"))
+    // small: both sides in one partition, and the hash join builds on the
+    // query side inside the same task, so there is no broadcast job either
+    val (q, c) =
+      if (SizeRule.small(queries, corpus)) (q0.coalesce(1).hint("shuffle_hash"), c0.coalesce(1))
+      else (q0, c0)
     // no distinct needed: probe cells are distinct per query and each
     // corpus row lives in exactly one cell, so a (query, neighbor) pair
-    // can only surface once
+    // can only surface once. The corpus norm is taken after the join (the
+    // same value per row): a single serving query pays it on the
+    // nprobe/cents of the corpus it scores, not on every row; a batch of
+    // q queries pays it once per scored pair, q·nprobe/cents per row.
     val scored = q.join(c, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(V.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 4).as("cos"))
+        round(V.dot(col("qv"), col("nv")) / (col("qn") * V.norm(col("nv"))), 4).as("cos"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
   }

@@ -14,10 +14,12 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Runs `body` on the distributed (propagation-round) path of
-    * `Dedup.clusters`, whose size rule otherwise finishes small graphs on
-    * the driver: broadcasting is turned off, then the prior value is put
-    * back (or the conf unset if it had none).
+  /** Runs `body` with every `operators.SizeRule` path off: the
+    * distributed (propagation-round) path of `Dedup.clusters`, whose size
+    * rule otherwise finishes small graphs on the driver, and the
+    * shuffling plans of the marts and `ivfTopK`, which otherwise run a
+    * small input as one partition. Broadcasting is turned off, then the
+    * prior value is put back (or the conf unset if it had none).
     */
   def distributedCC[A](body: => A): A = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
