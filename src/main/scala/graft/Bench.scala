@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -17,43 +15,15 @@ import org.apache.spark.sql.SparkSession
   * judge adjudication traced inflated captures to exactly that), while
   * under full-set passes the spike hits pass 1 of some queries and pass
   * 2 of OTHERS, so every query still gets one clean measurement. The
-  * JSON carries "runs" so rounds stay comparable.
+  * JSON carries "runs" and "cpus" (the local[N] the session ran,
+  * [[GraftSession.localCpus]]) so captures state their own mode.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's harness (local[32], shuffle
-    // partitions 32) so un-prefixed local runs measure the same mode
-    // the per-round BENCH artifacts record — the r12 decade-3 session
-    // burned hours benchmarking at a silent local[4]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE coalescing floor, env-overridable for experiments; default
-      // is Spark's own 1m. A 64k floor was tried (the audit families'
-      // per-pair aggregates are a few MB of shuffle carrying 5-10
-      // CPU-seconds, and byte-based coalescing ran them 1-5 wide on 32
-      // cores) and MEASURED A NET LOSS r15: every iterative graph query
-      // pays per-round shuffles whose un-coalesced tiny tasks cost more
-      // in scheduling + localCheckpoint width than the extra audit
-      // parallelism earns (14-query A/B: 133.3 s at 64k vs 95.5 s at
-      // 1m — q_hits +7.8 s, q_scc +4.6 s, q_pagerank +4.1 s, while the
-      // intended beneficiary text_champ_recall_floor moved -0.7 s).
-      // CPU-dense narrow stages get their width from the targeted
-      // [[operators.CpuStage.fanOut]] floor instead.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietDeclaredBoundedWindows()
+    val cpus = GraftSession.localCpus()
+    val spark = GraftSession.local(cpus)
     val telemetry = ShuffleTelemetry.install(spark)
     // warm-up: touch every table once so no query's time includes
     // first-scan/codec/JVM initialization
@@ -106,7 +76,7 @@ object Bench {
     val canaryCleanRef = sys.env.get("SPARK_GRAFT_CANARY_REF").map(_.toDouble).getOrElse(1.10)
     def hotCanary(c: Double): Boolean = c > 1.25 * canaryCleanRef
     val contendedStart = hotCanary(canaryStart) ||
-      loadBefore.split(",").headOption.flatMap(_.toDoubleOption).exists(_ > cpus.toDouble / 2)
+      loadBefore.split(",").headOption.flatMap(_.toDoubleOption).exists(_ > cpus / 2.0)
     // optional subset for fast local iteration: SPARK_GRAFT_ONLY=q1,q2;
     // SPARK_GRAFT_SKIP excludes named queries (full-set captures on
     // boxes without headroom for a known disk-bound query — the skipped
@@ -222,7 +192,7 @@ object Bench {
     val contended =
       if (canaryOk) (contendedStart || hotCanary(canaryEnd)).toString else "null"
     val pw = new java.io.PrintWriter(detailFile, "UTF-8")
-    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"canary_ref":$canaryCleanRef,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"canary_ref":$canaryCleanRef,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","cpus":$cpus,"runs":$runs}""")
     finally pw.close()
     val slow = results.sortBy(-_._2).take(25)
       .map { case (k, v, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
@@ -232,7 +202,7 @@ object Bench {
     // precisely when the marker matters most; failed_count carries the
     // true total and the sidecar the full list.
     val failedShown = failedJson(failedNames.take(8))
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","cpus":$cpus,"runs":$runs}""")
     spark.stop()
   }
 }

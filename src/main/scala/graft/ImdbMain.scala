@@ -18,13 +18,7 @@ import graft.sources.Sources
 object ImdbMain {
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName("graft-imdb-etl")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, opts)
+    run(GraftSession.submitted(), opts)
   }
 
   case class Opts(rawDir: String = "raw", dwDir: String = "dw", martsDir: String = "marts",

@@ -11,18 +11,6 @@ object Params {
   // if a graph needs more. log2(components) ≈ 18 at sf1's ~200k
   // partkeys, so 20 covers a decade beyond observed 5-7 rounds.
   val MsfMaxRounds = 20
-  // Borůvka tail cutover: once the frontier holds at most this many
-  // cross-component edges, the remaining rounds run driver-local
-  // (bounded state: ≤ 64k edges × 5 longs ≈ 2.6 MB collected once).
-  // Components at least halve per round, so EVERY run at EVERY scale
-  // ends with ~log2(64k) = 16 such rounds — each a fixed ~1 s of
-  // scheduler/barrier overhead on data too small to parallelize
-  // (measured r15 at sf0.1: rounds at 595/3/0 edges cost 1.2-1.5 s
-  // each, >4 s of the 11 s query). The distributed path still runs
-  // every round above the cutover, so the 100 TB plan shape is
-  // untouched; the local replay is pick/contract-identical, so the
-  // output rows (u, v, w, round) are bit-equal either way.
-  val MsfLocalTailEdges = 65536L
   // minhash / LSH over documents
   val MinhashK = 16
   val MinhashBands = 4

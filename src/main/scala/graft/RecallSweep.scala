@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Champion-list recall sweep: recall@k of the champion ranking vs the
   * exact ranking at several champion-list sizes M, on the same fixed
@@ -45,16 +45,7 @@ object RecallSweep {
       s"ranker must be bm25|jaccard|jaccardlsh, got $ranker")
     val budget = args.lift(3).map(_.toInt).getOrElse(Params.AuditQueryBudget)
     val force = args.lift(4).contains("force")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Logs.quietDeclaredBoundedWindows()
+    val spark = GraftSession.local()
     import Params._
     val docs = Tables.load(spark, dir, "documents")
     // BINDING pre-flight: forecast the exact half's candidate stream

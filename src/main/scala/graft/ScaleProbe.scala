@@ -15,15 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.parquet is TIMESTAMP(NANOS) — reads throw without this
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     if (args.headOption.contains("explain")) { explainAudit(spark, args); spark.stop(); return }
     if (args.headOption.contains("jse")) { jseProbe(spark, args); spark.stop(); return }
     if (args.headOption.contains("retrieval")) { retrieval(spark, args); spark.stop(); return }

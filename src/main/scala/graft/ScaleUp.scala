@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic K× scale-up of a testdata directory — the growth-curve
@@ -50,15 +50,7 @@ object ScaleUp {
     val docMode = args.lift(4).getOrElse("suffix")
     require(docMode == "suffix" || docMode == "mark",
       s"doc mode must be suffix|mark, got $docMode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def load(n: String): DataFrame =
       if (n == "events") Tables.events(spark, src) else Tables.load(spark, src, n)

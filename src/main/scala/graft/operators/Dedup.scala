@@ -316,7 +316,7 @@ object Dedup {
     *
     * Two paths give the same components; a size rule picks one. The pair
     * graph becomes a persisted symmetric edge table (two ids per row). A
-    * bounded probe reads at most [[SizeRule.driverEdges]] + 1 of its rows
+    * bounded probe reads at most [[SizeRule.driverRows]] + 1 of its rows
     * — Spark's own "small enough to ship whole" test,
     * `spark.sql.autoBroadcastJoinThreshold` at 16 bytes a row (two 8-byte
     * ids), capped by the driver heap at [[SizeRule.DriverRowBytes]] a
@@ -381,7 +381,7 @@ object Dedup {
     val edges = live.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(live.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist()
-    val maxEdges = SizeRule.driverEdges(pairs.sparkSession)
+    val maxEdges = SizeRule.driverRows(pairs.sparkSession, SizeRule.EdgeRowBytes)
     val idType = edges.schema("u").dataType
     // bounded probe: at most maxEdges + 1 rows, read from the persisted
     // edges (the job that fills the cache the rounds would read anyway)
@@ -398,36 +398,18 @@ object Dedup {
     out
   }
 
-  /** The driver path of [[clusters]]: union-find over the whole symmetric
-    * edge table (`rows` of (u, v) longs). Node ids sit in a sorted
-    * primitive array (every node is the `u` of some row); a union always
-    * links the larger root under the smaller, so each root is its
-    * component's smallest id — the label the propagation fixpoint
-    * reaches. The result is a local relation with the distributed path's
-    * column names and id type.
+  /** The driver path of [[clusters]]: [[SizeRule.components]] over the
+    * whole symmetric edge table (`rows` of (u, v) longs), whose labels
+    * are the propagation fixpoint's. The result is a local relation with
+    * the distributed path's column names and id type.
     */
   private def driverComponents(spark: SparkSession, rows: Array[Row],
                                idType: DataType): DataFrame = {
-    val us = rows.map(_.getLong(0))
-    val ids = us.clone()
-    java.util.Arrays.sort(ids)
-    var n = 0
-    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
-    val parent = Array.range(0, n)
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
-    for (e <- rows.indices) {
-      val a = find(index(us(e)))
-      val b = find(index(rows(e).getLong(1)))
-      if (a < b) parent(b) = a else if (b < a) parent(a) = b
-    }
-    val out = (0 until n).map { i =>
-      val (id, label) = (ids(i), ids(find(i)))
-      if (idType == IntegerType) Row(id.toInt, label.toInt) else Row(id, label)
+    val (ids, labels) =
+      SizeRule.components(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val out = ids.indices.map { i =>
+      if (idType == IntegerType) Row(ids(i).toInt, labels(i).toInt)
+      else Row(ids(i), labels(i))
     }
     // nullability as the propagation rounds leave it: node ids come from
     // null-filtered pairs, labels from an aggregate min

@@ -46,6 +46,9 @@ import org.apache.spark.sql.functions._
   */
 object Msf {
 
+  /** Budget bytes of one frontier row: (u, v, w, cu, cv), five longs. */
+  private val TailRowBytes = 40L
+
   /** `edges`: long `src`, `dst`, `w` (undirected; parallel edges keep
     * the min weight). Returns forest edges (u, v, w, round) with
     * u < v; `round` is the Borůvka round that admitted the edge.
@@ -72,9 +75,8 @@ object Msf {
     // classic partial-materialization blowup; an aggregate probe
     // materializes every partition exactly once
     var remaining = ec.count()
-    val dbg = sys.env.contains("GRAFT_MSF_DEBUG")
-    while (remaining > graft.Params.MsfLocalTailEdges && round <= maxRounds) {
-      val tR0 = System.nanoTime()
+    val tailEdges = SizeRule.driverRows(edges.sparkSession, TailRowBytes)
+    while (remaining > tailEdges && round <= maxRounds) {
       // each component nominates its cheapest outgoing edge: emit the
       // edge once per side (single pass — explode, not a self-union
       // that would scan the frontier twice), min-struct per component
@@ -90,11 +92,9 @@ object Msf {
           col("m.cu").as("cu"), col("m.cv").as("cv"))
         .distinct() // the edge both of its components picked enters once
         .transform(Barrier.local(_)) // consumers: forest piece + merge edges
-      val tPick = System.nanoTime()
       // the picked edges carry their component pair, so the merge graph
       // needs NO node-label join — it's a projection of picked
       val relabel = contractPicks(picked)
-      val tCc = System.nanoTime()
       pieces += picked.select(col("u"), col("v"), col("w"),
         lit(round.toLong).as("round"))
       // contract: rewrite both endpoint labels via the (component-sized,
@@ -118,28 +118,30 @@ object Msf {
           col("ca").as("cu"), col("cb").as("cv"))
         .transform(Barrier.local(_))
       remaining = ec.count()
-      if (dbg) println(f"[msf] round $round rem=$remaining " +
-        f"pick=${(tPick - tR0) / 1e9}%.2f cc=${(tCc - tPick) / 1e9}%.2f " +
-        f"rest=${(System.nanoTime() - tCc) / 1e9}%.2f")
       round += 1
     }
-    // bounded driver-local tail (see [[graft.Params.MsfLocalTailEdges]]):
-    // the last ~16 rounds of ANY run fit under the cutover (components at
-    // least halve per round), and each cost a fixed ~1 s of scheduler +
-    // barrier overhead on data far too small to parallelize. One capped
-    // collect replays the remaining rounds with the SAME pick/contract
-    // rules — per round: each component's (w,u,v)-min incident edge,
-    // distinct; contract along picks (label values are free: picks and
+    // bounded driver-local tail: once the frontier fits
+    // [[SizeRule.driverRows]] at 40 bytes a row (262,144 edges at the
+    // default 10 MB budget, fewer on a small driver heap: a tail row
+    // lives at roughly 330 B — collected Row, boxed tuple, one round's
+    // maps — under SizeRule.DriverRowBytes), the remaining rounds run on
+    // the driver. Components at least halve per round, so every run ends
+    // with ~log2(cutover) such rounds, each a fixed ~1 s of scheduler +
+    // barrier overhead on data far too small to parallelize (r15 at
+    // sf0.1: rounds at 595/3/0 edges cost 1.2-1.5 s each, >4 s of an
+    // 11 s query). One capped collect replays the remaining rounds with
+    // the SAME pick/contract rules — per round: each component's
+    // (w,u,v)-min incident edge, distinct; contract along picks
+    // ([[SizeRule.components]]; label values are free: picks and
     // collapses compare only (w,u,v), which is unique per edge, and the
     // output carries no labels — the same argument the DuckDB twin
     // relies on); relabel, drop internal, collapse parallel pairs to
     // their (w,u,v)-min. Output rows are bit-equal to the distributed
     // rounds'.
-    if (remaining > 0 && remaining <= graft.Params.MsfLocalTailEdges) {
-      val rows = ec.select(col("u"), col("v"), col("w"), col("cu"), col("cv"))
-        .collect()
-      var local = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
+    if (remaining > 0 && remaining <= tailEdges) {
+      var local = ec.select(col("u"), col("v"), col("w"), col("cu"), col("cv"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))
       // (w, u, v) total order — the struct-min order with c fixed and
       // (cu, cv) unreachable behind the unique (w, u, v)
       def lt(a: (Long, Long, Long, Long, Long),
@@ -150,7 +152,6 @@ object Msf {
       while (local.nonEmpty) {
         require(round <= maxRounds,
           s"Msf.msf: not converged after $maxRounds rounds — raise maxRounds")
-        val tR0 = System.nanoTime()
         // pick: per component the (w,u,v)-min incident edge, deduped
         val byComp = scala.collection.mutable.HashMap
           .empty[Long, (Long, Long, Long, Long, Long)]
@@ -162,19 +163,12 @@ object Msf {
         local.foreach { e => offer(e._4, e); offer(e._5, e) }
         val picked = byComp.values.toSet
         picked.foreach(e => outRows += ((e._1, e._2, e._3, round.toLong)))
-        // contract: components of the pick graph, labeled by class min
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        picked.foreach { e =>
-          val (ra, rb) = (find(e._4), find(e._5))
-          if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
-        }
+        // contract: components of the pick graph, labeled by class min;
+        // every component of `local` picked an edge, so each label is a
+        // node of the pick graph
+        val pa = picked.toArray
+        val (comps, labels) = SizeRule.components(pa.map(_._4), pa.map(_._5))
+        def find(c: Long): Long = labels(java.util.Arrays.binarySearch(comps, c))
         // relabel + drop internal + collapse parallel pairs to (w,u,v)-min
         val best = scala.collection.mutable.HashMap
           .empty[(Long, Long), (Long, Long, Long, Long, Long)]
@@ -190,8 +184,6 @@ object Msf {
           }
         }
         local = best.values.toArray
-        if (dbg) println(f"[msf] round $round rem=${local.length} " +
-          f"local=${(System.nanoTime() - tR0) / 1e9}%.2f")
         round += 1
       }
       remaining = 0

@@ -13,12 +13,12 @@ object SizeRule {
   /** Bytes one (Long, Long) edge row counts against the budget. */
   val EdgeRowBytes = 16L
 
-  /** Driver heap charged per collected (Long, Long) row. Live cost is
-    * about 230 B: the serialized result block (≈ 28 B), the
-    * `GenericRowWithSchema` with its values array and two boxed longs
-    * (≈ 110 B), the union-find's primitive arrays (20 B) and the
-    * per-node output `Row` (≈ 70 B). 512 B keeps a driver finish under
-    * half the heap.
+  /** Driver heap charged per collected row. A (Long, Long) edge row of
+    * `Dedup.clusters` lives at about 250 B: the serialized result block
+    * (≈ 28 B), the `GenericRowWithSchema` with its values array and two
+    * boxed longs (≈ 110 B), the [[components]] arrays (≈ 44 B) and the
+    * per-node output `Row` (≈ 70 B). 512 B keeps such a driver finish
+    * under half the heap.
     */
   val DriverRowBytes = 512L
 
@@ -58,9 +58,38 @@ object SizeRule {
   def driverRows(budget: Long, heapBytes: Long, rowBytes: Long): Long =
     math.min(math.min(budget / rowBytes, heapBytes / DriverRowBytes), Int.MaxValue - 1L)
 
-  /** [[driverRows]] for (Long, Long) edge rows under the session's
-    * budget and this JVM's maximum heap.
+  /** [[driverRows]] at `rowBytes` a row under the session's budget and
+    * this JVM's maximum heap.
     */
-  def driverEdges(spark: SparkSession): Long =
-    driverRows(budget(spark), Runtime.getRuntime.maxMemory, EdgeRowBytes)
+  def driverRows(spark: SparkSession, rowBytes: Long): Long =
+    driverRows(budget(spark), Runtime.getRuntime.maxMemory, rowBytes)
+
+  /** Connected components of the graph with edges (`us(i)`, `vs(i)`),
+    * on the driver: a union-find over primitive arrays. Node ids sit in
+    * a sorted array; a union always links the larger root under the
+    * smaller, so each root is its component's smallest id — the label
+    * the distributed min-label rounds reach. Returns the sorted distinct
+    * node ids and each one's label.
+    */
+  def components(us: Array[Long], vs: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = java.util.Arrays.copyOf(us, us.length + vs.length)
+    System.arraycopy(vs, 0, ids, us.length, vs.length)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (e <- us.indices) {
+      val a = find(index(us(e)))
+      val b = find(index(vs(e)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val nodes = java.util.Arrays.copyOf(ids, n)
+    (nodes, Array.tabulate(n)(i => nodes(find(i))))
+  }
 }

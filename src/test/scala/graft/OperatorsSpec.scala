@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.etl.{Marts, Staging}
 import graft.functions.{TextFunctions => T}
@@ -1647,20 +1648,41 @@ class OperatorsSpec extends SparkSpec {
     assert(TextOps.phraseSearch(docs, "doc_id", "text", Seq("z", "q")).isEmpty)
   }
 
-  test("msf: hand graph — cheapest edges win, cycles excluded, forest per component") {
+  /** The msf hand-graph checks; returns both forests for path checks. */
+  private def msfHandGraphs(): (DataFrame, DataFrame) = {
     import graft.operators.Msf
     // component A: square 1-2-3-4 with diagonal; component B: pair 8-9
     val edges = Seq(
       (1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L), (1L, 4L, 10L), (1L, 3L, 9L),
       (8L, 9L, 5L)).toDF("src", "dst", "w")
-    val out = Msf.msf(edges)
+    val forest = Msf.msf(edges)
+    val out = forest
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(out === Set((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L), (8L, 9L, 5L)))
     // parallel edges keep the min; self loops drop
-    val out2 = Msf.msf(Seq((1L, 2L, 7L), (2L, 1L, 3L), (1L, 1L, 1L))
+    val forest2 = Msf.msf(Seq((1L, 2L, 7L), (2L, 1L, 3L), (1L, 1L, 1L))
         .toDF("src", "dst", "w"))
+    val out2 = forest2
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(out2 === Set((1L, 2L, 3L)))
+    (forest, forest2)
+  }
+
+  test("msf: hand graph — cheapest edges win, cycles excluded, forest per component") {
+    val (a, b) = msfHandGraphs()
+    assert(msfSides(a) === ((false, true)) && msfSides(b) === ((false, true)),
+      "the default conf finishes small graphs on the driver")
+  }
+
+  test("msf: hand graph with every Borůvka round distributed") {
+    val (a, b) = distributedCC(msfHandGraphs())
+    assert(msfSides(a) === ((true, false)) && msfSides(b) === ((true, false)))
+  }
+
+  test("msf: hand graph on both sides of a 4-edge driver-tail cutover") {
+    val (a, b) = msfCutoverAt4(msfHandGraphs())
+    assert(msfSides(a) === ((true, false)), "6 frontier edges: distributed round")
+    assert(msfSides(b) === ((false, true)), "1 frontier edge: driver tail")
   }
 
   test("canonicalUrl collapses every per-click variant of the same page") {

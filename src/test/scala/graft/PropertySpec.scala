@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.etl.Staging
 import graft.operators.{EventOps, GlobalRank, RangeJoin, Sampling}
+import scala.util.chaining._
 
 /** Randomized property checks (seeded — deterministic across runs):
   * each operator is compared against a brute-force reference
@@ -177,9 +179,14 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: Borůvka MSF equals local Kruskal on random distinct-weight graphs") {
+  /** Borůvka MSF against a local Kruskal on random distinct-weight
+    * graphs, a deep chain and tied weights; returns every forest for
+    * path checks.
+    */
+  private def msfKruskalParity(): Seq[DataFrame] = {
     import graft.operators.Msf
     import spark.implicits._
+    val forests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def kruskal(n: Int, es: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] = {
       val parent = scala.collection.mutable.Map((0L until n.toLong).map(i => i -> i): _*)
       def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
@@ -201,7 +208,7 @@ class PropertySpec extends SparkSpec {
       }.distinct.zipWithIndex
         // distinct weights via a fixed pseudo-random permutation
         .map { case ((u, v, _), i) => (u, v, ((i * 2654435761L) % 1000003L)) }
-      val got = Msf.msf(es.toDF("src", "dst", "w"))
+      val got = Msf.msf(es.toDF("src", "dst", "w")).tap(forests += _)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val want = kruskal(n, es)
       assert(got === want,
@@ -212,7 +219,7 @@ class PropertySpec extends SparkSpec {
     // pointer trees are as deep as they can get and the contraction's
     // batched doubling must run multiple batches to find the roots
     val chain = (0L until 300L).map(i => (i, i + 1, 100000L - i * 3))
-    val gotChain = Msf.msf(chain.toDF("src", "dst", "w"))
+    val gotChain = Msf.msf(chain.toDF("src", "dst", "w")).tap(forests += _)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(gotChain === kruskal(301, chain).toSet,
       "deep-chain graph: Borůvka/Kruskal diverge")
@@ -226,10 +233,25 @@ class PropertySpec extends SparkSpec {
       while (v == u) v = rnd2.nextInt(60).toLong
       (u min v, u max v, 42L)
     }.distinct
-    val gotTied = Msf.msf(tied.toDF("src", "dst", "w"))
+    val gotTied = Msf.msf(tied.toDF("src", "dst", "w")).tap(forests += _)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(gotTied === kruskal(60, tied),
       "tied-weight graph: Borůvka/Kruskal diverge")
+    forests.toSeq
+  }
+
+  test("property: Borůvka MSF equals local Kruskal on random distinct-weight graphs") {
+    assert(msfKruskalParity().forall(msfSides(_) == ((false, true))),
+      "the default conf finishes small graphs on the driver")
+  }
+
+  test("property: Borůvka MSF equals local Kruskal with every round distributed") {
+    assert(distributedCC(msfKruskalParity()).forall(msfSides(_) == ((true, false))))
+  }
+
+  test("property: Borůvka MSF equals local Kruskal across a 4-edge driver-tail cutover") {
+    assert(msfCutoverAt4(msfKruskalParity()).exists(msfSides(_) == ((true, true))),
+      "some graph must run distributed rounds and then the driver tail")
   }
 
   test("property: cdcChunks tile any payload; identical bytes chunk identically") {
