@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * (Spark, DuckDB, Trino, ...) computes bit-identical signatures — that is
   * what lets the DuckDB oracle replay these operators exactly.
   *
-  * Scale notes: signatures are computed map-side per row (HOFs over the
-  * token array, no explode, no shuffle); the only shuffle any LSH consumer
-  * needs is the band→bucket exchange keyed on a 16-byte digest.
+  * Scale notes: MinHash band keys come map-side per row from one codegen'd
+  * kernel, `graft.plans.MinhashBandKeys` (no explode, no shuffle); the
+  * only shuffle any LSH consumer needs is the band→bucket exchange.
   */
 object HashFunctions {
 
@@ -42,12 +42,12 @@ object HashFunctions {
   def affineHash(h: Column, a: Long, b: Long): Column =
     pmod(h * lit(a) + lit(b), lit(MinhashP))
 
-  /** Integer LSH band key from `rowsPerBand` minhash columns: base-31
-    * polynomial combine (exact, < 2^45, portable). Rare combine
-    * collisions only ever ADD candidates, never lose them.
+  /** `bands` integer LSH band keys per row of a shingle array (exact,
+    * < 2^45; rare combine collisions only ever ADD candidates).
     */
-  def bandKey(mins: Seq[Column]): Column =
-    mins.reduce((acc, m) => acc * lit(31L) + m)
+  def minhashBandKeys(shingles: Column, k: Int, bands: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.MinhashBandKeys(
+      org.apache.spark.sql.graft.ColumnBridge.expression(shingles), k, bands))
 
   /** One 32-bit half of the 64-bit SimHash token hash: 8 hex chars of the
     * token's md5 (`half` = 0 → chars 1-8 = bits 0..31, `half` = 1 →

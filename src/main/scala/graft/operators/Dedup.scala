@@ -37,36 +37,22 @@ object Dedup {
       .groupBy("content_hash")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Per-doc minhash signature as k min-aggregates over the per-shingle
-    * base hash: explode → ONE md5 per shingle → k cheap affine maps →
-    * hash-aggregate with map-side partial mins. The only exchange carries
-    * (doc key, k ints); the md5 is computed exactly once per shingle
-    * (HOF-per-seed variants recompute it k times after Catalyst collapses
-    * the projections).
+  /** Per-row MinHash band keys `bks` (`bands` longs) from the one
+    * [[H.minhashBandKeys]] kernel: no explode, no aggregate, no exchange.
+    * Null text or fewer than `shingleN` tokens → no row. One signature per
+    * INPUT row: rows sharing an id are not merged (pairs compare ids `<`).
     */
   def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int, bands: Int, shingleN: Int = 2): DataFrame = {
-    val rows = k / bands
-    val coeffs = H.minhashCoeffs(k)
+                   k: Int, bands: Int, shingleN: Int = 2): DataFrame =
     // NO width floor here: a CpuStage.fanOut was tried r15 (the
     // shingle+md5+k affine mins run fused into a one-task scan stage on
     // a single-split corpus) and MEASURED A NET LOSS in a clean A/B —
     // repartitioning the document payload costs more than the extra
     // width earns (dedup_consensus 6.9 -> 8.5 s, dedup_lsh_recall
     // 5.4 -> 6.0 s at sf0.1/32 cores)
-    val hashed = docs
-      .select(col(idCol), explode(T.shingles(col(textCol), shingleN)).as("t"))
-      .select(col(idCol), H.shingleHash(col("t")).as("hb"))
-    val sig = hashed.groupBy(col(idCol))
-      .agg(min(H.affineHash(col("hb"), coeffs.head._1, coeffs.head._2)).as("mh0"),
-        coeffs.tail.zipWithIndex.map { case ((a, b), i) =>
-          min(H.affineHash(col("hb"), a, b)).as(s"mh${i + 1}")
-        }: _*)
-    val bandKeys = (0 until bands).map { b =>
-      H.bandKey((0 until rows).map(r => col(s"mh${b * rows + r}")))
-    }
-    sig.select(col(idCol), array(bandKeys: _*).as("bks"))
-  }
+    // token-count filter BELOW the kernel: size(bks) > 0 is pushed down, kernel inlined
+    docs.where(size(T.tokens(col(textCol))) >= shingleN).select(col(idCol),
+      H.minhashBandKeys(T.shingles(col(textCol), shingleN), k, bands).as("bks"))
 
   /** LSH candidate pairs: docs sharing any band key. The exchange is
     * keyed on (band_id, band key); within a bucket the self-join emits
@@ -74,7 +60,9 @@ object Dedup {
     */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 16, bands: Int = 4, shingleN: Int = 2): DataFrame = {
+    // one exchange for both self-join sides (ReusedExchange): one signature pass
     val exploded = bandTable(docs, idCol, textCol, k, bands, shingleN)
+      .repartition(col("band_id"), col("bk"))
     val a = exploded.as("a")
     val b = exploded.as("b")
     a.join(b,
@@ -91,8 +79,10 @@ object Dedup {
     */
   def bandTable(docs: DataFrame, idCol: String, textCol: String,
                 k: Int = 16, bands: Int = 4, shingleN: Int = 2): DataFrame =
+    // _outer: an inner explode infers size(bks) > 0, pushed down with the
+    // kernel inlined; `bks` is never empty or null here, so no row is added
     minhashBands(docs, idCol, textCol, k, bands, shingleN)
-      .select(col(idCol), posexplode(col("bks")).as(Seq("band_id", "bk")))
+      .select(col(idCol), posexplode_outer(col("bks")).as(Seq("band_id", "bk")))
 
   /** Incremental dedup: candidate pairs involving NEW documents only —
     * new×new plus new×existing — against a persisted [[bandTable]]. At
@@ -106,10 +96,8 @@ object Dedup {
                             idCol: String, textCol: String,
                             k: Int = 16, bands: Int = 4): DataFrame = {
     // One join against the pooled (new ∪ existing) band rows instead of
-    // two joins + persist: the new batch's signature subtree appears
-    // twice with an IDENTICAL shape, so its aggregation exchange is
-    // reused (ReusedExchange) and the batch is shingled/minhashed once —
-    // no cache entry to leak in a long-running daily-increment service.
+    // two joins + persist — no cache entry to leak in a long-running
+    // daily-increment service.
     val nb = bandTable(newDocs, idCol, textCol, k, bands)
     val pool = nb.withColumn("is_new", lit(true)).unionByName(
       existingBands.select(col(idCol), col("band_id"), col("bk"))
@@ -326,8 +314,8 @@ object Dedup {
     * whatever the diameter. Otherwise (a larger graph, other id types, or
     * a threshold ≤ 0, Spark's "never broadcast") the min-label
     * propagation rounds below run on the same persisted edges the probe
-    * filled, so the pair plan is computed once either way. `maxIter`,
-    * `doubling` and `reliableCkpt` govern only that distributed path.
+    * filled, so the pair plan is computed once either way. `maxIter`
+    * and `doubling` govern only that distributed path.
     *
     * Distributed path: iterative min-label propagation until fixpoint.
     * Each iteration is exactly ONE join + one aggregate shuffle: the
@@ -345,18 +333,6 @@ object Dedup {
     * The driver only ever sees a single boolean (changed?) per round,
     * never data.
     *
-    * `reliableCkpt = false` switches the per-round barrier to an EAGER
-    * `localCheckpoint(true)` — same lineage truncation and same
-    * materialize-once contract, but executor-cached instead of written
-    * to the checkpoint dir. That forfeits executor-loss recovery, so it
-    * is ONLY for callers nested inside a loop whose own frontier is
-    * already local-checkpointed ([[Msf]]'s per-round contraction: the
-    * outer Borůvka state dies with an executor either way, and the
-    * contraction CC runs on the component-level merge graph many times
-    * per job — the per-round storage round-trip is its dominant cost).
-    * Top-level corpus-scale CC (near-dup clustering, DBSCAN, consensus)
-    * keeps the reliable default.
-    *
     * Hop batching (k propagation hops per barrier, testing only the
     * last hop's `chg` — sound, since one no-change hop proves the
     * fixpoint) was implemented and MEASURED A LOSS in r16, twice:
@@ -371,8 +347,7 @@ object Dedup {
     * stands.
     */
   def clusters(pairs: DataFrame, maxIter: Int = 20,
-               doubling: Boolean = false,
-               reliableCkpt: Boolean = true): DataFrame = {
+               doubling: Boolean = false): DataFrame = {
     val live = pairs.where(col("doc_a").isNotNull && col("doc_b").isNotNull)
     // no distinct: ngram/simhash/embedding pair generators emit unique
     // (a<b) pairs, so the two directions cannot collide — and min-label
@@ -392,7 +367,7 @@ object Dedup {
       else None
     val out = probe.filter(_.length <= maxEdges) match {
       case Some(rows) => driverComponents(edges.sparkSession, rows, idType)
-      case None => propagate(edges, maxIter, doubling, reliableCkpt)
+      case None => propagate(edges, maxIter, doubling)
     }
     edges.unpersist()
     out
@@ -422,16 +397,9 @@ object Dedup {
     * over the persisted symmetric `edges` (see [[clusters]] for the loop's
     * contract).
     */
-  private def propagate(edges: DataFrame, maxIter: Int, doubling: Boolean,
-                        reliableCkpt: Boolean): DataFrame = {
+  private def propagate(edges: DataFrame, maxIter: Int, doubling: Boolean): DataFrame = {
     val spark = edges.sparkSession
-    // stats-resetting barriers ([[Barrier]]): with doubling=true the
-    // halving step SELF-JOINS the label table, and a raw checkpoint's
-    // carried size estimate would square per round — 2^rounds bits of
-    // BigInt by round 15, all burned in the driver's stats arithmetic
-    def barrier(df: DataFrame): DataFrame =
-      if (reliableCkpt) Barrier.reliable(df) else Barrier.local(df, eager = true)
-    if (reliableCkpt && spark.sparkContext.getCheckpointDir.isEmpty) {
+    if (spark.sparkContext.getCheckpointDir.isEmpty) {
       // a driver-local tmp dir is only a valid checkpoint target in local
       // mode; on a cluster the caller must point this at durable shared
       // storage or the reliability story is silently void
@@ -449,8 +417,7 @@ object Dedup {
     // sets it); otherwise each round's labels accumulate in the
     // checkpoint dir for the life of the app — at one dir per round per
     // corpus-scale run that is real storage, so warn loudly.
-    if (reliableCkpt &&
-        spark.conf.getOption("spark.cleaner.referenceTracking.cleanCheckpoints")
+    if (spark.conf.getOption("spark.cleaner.referenceTracking.cleanCheckpoints")
           .forall(_ != "true")) {
       Console.err.println(
         "graft.Dedup.clusters: set spark.cleaner.referenceTracking." +
@@ -461,7 +428,11 @@ object Dedup {
     // no join, no separate identity-labels materialization
     val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     val t0 = System.nanoTime()
-    var labels = barrier(edges.groupBy(col("u"))
+    // stats-resetting barriers ([[Barrier]]): with doubling=true the
+    // halving step SELF-JOINS the label table, and a raw checkpoint's
+    // carried size estimate would square per round — 2^rounds bits of
+    // BigInt by round 15, all burned in the driver's stats arithmetic
+    var labels = Barrier.reliable(edges.groupBy(col("u"))
       .agg(least(col("u"), min(col("v"))).as("label")))
     if (dbg) println(f"[cc] init ${(System.nanoTime() - t0) / 1e9}%.2f")
     var iter = 1
@@ -469,8 +440,8 @@ object Dedup {
     while (changed && iter < maxIter) {
       val tR = System.nanoTime()
       val prop = ccRound(edges, labels)
-      // eager barrier: materializes the round once (reliably by default)
-      val next = barrier(if (doubling) halveRound(prop) else prop)
+      // eager barrier: materializes the round once, reliably
+      val next = Barrier.reliable(if (doubling) halveRound(prop) else prop)
       // cheap scan of the checkpointed output — not a recompute; coalesce
       // covers the empty-graph case (max over zero rows is null)
       changed = next.agg(coalesce(max(col("chg")), lit(false))).first().getBoolean(0)

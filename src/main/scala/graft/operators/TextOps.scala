@@ -701,8 +701,8 @@ object TextOps {
     val sh = digests.getOrElse(shingleDigests(docs, idCol, textCol, shingleN))
     val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // band table computed once, consumed twice (query probes + corpus
-    // buckets) — the checkpoint stops the signature aggregation from
-    // running on both sides of the probe join
+    // buckets) — the checkpoint saves a second shingle + md5 pass of
+    // the signature kernel on the other side of the probe join
     val bt = Dedup.bandTable(docs, idCol, textCol, lshK, lshBands, shingleN)
       .select(col(idCol).as("doc_id"), col("band_id"), col("bk"))
       .localCheckpoint(false)

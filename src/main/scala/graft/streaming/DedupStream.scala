@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -24,28 +24,9 @@ object DedupStream {
     */
   case class NearDupCandidate(doc_a: Long, doc_b: Long, band_id: Int, bk: Long)
 
-  /** MinHash band keys as a PURE map-side expression — no aggregation:
-    * mh_i = array_min over the shingle array of the i-th affine hash,
-    * which equals the batch `minhashBands` groupBy-min exactly (min over
-    * the same multiset), then the same base-31 band combine. This is
-    * what makes the streaming form possible: Spark rejects an
-    * aggregation feeding flatMapGroupsWithState, and at 100 TB/day a
-    * per-doc signature must not shuffle anyway.
-    */
-  private[graft] def bandKeysExpr(textCol: Column, k: Int, bands: Int,
-                                  shingleN: Int): Column = {
-    val rows = k / bands
-    val coeffs = H.minhashCoeffs(k)
-    val hs = transform(T.shingles(textCol, shingleN), t => H.shingleHash(t))
-    val mins = coeffs.map { case (a, b) =>
-      array_min(transform(hs, h => H.affineHash(h, a, b)))
-    }
-    array((0 until bands).map(b =>
-      H.bandKey((0 until rows).map(r => mins(b * rows + r)))): _*)
-  }
-
   /** Streaming MinHash-LSH candidate detection with watermark-bounded
-    * state: each arriving doc's band keys are computed map-side; per
+    * state: each arriving doc's band keys come from the batch kernel
+    * ([[H.minhashBandKeys]], row-local: Spark rejects an aggregation here); per
     * band key the FIRST claimant (by event time, then id — deterministic
     * on replay) is held as state, and every later doc touching the band
     * inside the horizon emits a candidate pair against it.
@@ -66,20 +47,18 @@ object DedupStream {
     *
     * Callers must set a watermark on `tsCol` BEFORE calling (the
     * event-time timeout requires one); docs whose token count is below
-    * `shingleN` have no shingles and pass through unflagged, like the
-    * batch side's empty-shingle drop.
+    * `shingleN` have no shingles, hence no band keys, and pass through
+    * unflagged, like the batch side's empty-shingle drop.
     */
   def nearDupCandidates(docs: DataFrame, idCol: String, textCol: String,
                         tsCol: String, horizonMs: Long,
                         k: Int = 16, bands: Int = 4,
                         shingleN: Int = 2): Dataset[NearDupCandidate] = {
     require(horizonMs > 0, "nearDupCandidates: horizonMs must be positive")
-    require(k % bands == 0, "k must divide into bands")
     import docs.sparkSession.implicits._
     docs
-      .where(size(T.tokens(col(textCol))) >= shingleN)
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),
-        posexplode(bandKeysExpr(col(textCol), k, bands, shingleN))
+        posexplode(H.minhashBandKeys(T.shingles(col(textCol), shingleN), k, bands))
           .as(Seq("band_id", "bk")))
       .as[(Long, java.sql.Timestamp, Int, Long)]
       .groupByKey(r => (r._3, r._4))

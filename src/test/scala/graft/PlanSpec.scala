@@ -50,13 +50,13 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*(1)"), s"expected codegen spans:\n$plan")
   }
 
-  test("minhash signatures need exactly one exchange, with map-side partial mins") {
+  test("minhash signatures need no exchange: one map-side kernel per row") {
     val df = graft.operators.Dedup.minhashBands(
       Tables.load(spark, sfDir, "documents"), "doc_id", "text", 16, 4)
     val plan = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(plan).length
-    assert(exchanges === 1, s"signature stage should shuffle once (doc key), got $exchanges:\n$plan")
-    assert(plan.contains("partial_min"), s"expected map-side partial mins:\n$plan")
+    assert(exchanges === 0, s"signature stage must not shuffle, got $exchanges:\n$plan")
+    assert(plan.contains("graft_minhash_band_keys"), s"expected the signature kernel:\n$plan")
   }
 
   test("connected-components round is one join + one aggregate, no probe join") {

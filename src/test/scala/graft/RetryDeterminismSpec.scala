@@ -1,0 +1,93 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{Success, TaskKilled}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.udf
+
+import graft.operators.Dedup
+
+/** The dedup pass returns the same rows when task attempts are killed and
+  * re-run: a listener kills the first attempt of every 3rd task, and each
+  * operator's rows must equal a clean run's. Each case also asserts that
+  * some attempt really ended `TaskKilled` and its task then succeeded on
+  * a later attempt — otherwise the comparison proves nothing.
+  */
+class RetryDeterminismSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Kills attempt 0 of every task whose id is a multiple of 3; counts
+    * tasks that ended killed and later succeeded on a re-run.
+    */
+  private class KillEveryThirdTask extends SparkListener {
+    val killed = ConcurrentHashMap.newKeySet[(Int, Int, Int)]()
+    val rerun = new AtomicInteger()
+    override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      if (e.taskInfo.attemptNumber == 0 && e.taskInfo.taskId % 3 == 0)
+        spark.sparkContext.killTaskAttempt(e.taskInfo.taskId, interruptThread = false,
+          "retry-determinism spec")
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val k = (e.stageId, e.stageAttemptId, e.taskInfo.index)
+      e.reason match {
+        case _: TaskKilled => killed.add(k)
+        case Success if e.taskInfo.attemptNumber > 0 && killed.contains(k) => rerun.incrementAndGet()
+        case _ =>
+      }
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** Rows of `build()` on a clean run, then under the kill listener. */
+  private def sameUnderRetries(build: () => DataFrame): Unit = {
+    val clean = rows(build())
+    assert(clean.nonEmpty, "a case with no rows compares nothing")
+    val sc = spark.sparkContext
+    val killer = new KillEveryThirdTask
+    sc.addSparkListener(killer)
+    val retried =
+      try rows(build())
+      finally {
+        org.apache.spark.graft.ListenerBusDrain.drain(sc, 10000L)
+        sc.removeSparkListener(killer)
+      }
+    info(s"${killer.killed.size} attempts killed, ${killer.rerun.get()} re-run")
+    assert(killer.rerun.get() > 0, "no killed attempt was re-run")
+    assert(retried === clean)
+  }
+
+  // deterministic identities that hold each input row 1 ms, so a first
+  // attempt is still running when its kill arrives over the listener bus
+  private val heldText = udf((s: String) => { Thread.sleep(1); s })
+  private val heldId = udf((x: Long) => { Thread.sleep(1); x })
+
+  private def docs = Tables.load(spark, sfDir, "documents").repartition(4, $"doc_id")
+    .withColumn("text", heldText($"text"))
+
+  // a 2000-node graph of 200 ten-node chains, over 8 partitions
+  private def chains = spark.range(0L, 2000L, 1L, 8).where($"id" % 10 =!= 9L)
+    .select(heldId($"id").as("doc_a"), ($"id" + 1L).as("doc_b"))
+
+  test("minhashCandidates is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Dedup.minhashCandidates(docs, "doc_id", "text"))
+  }
+
+  test("ngramJaccard is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Dedup.ngramJaccard(docs, "doc_id", "text", Params.JaccardMin))
+  }
+
+  test("clusters (driver path) is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Dedup.clusters(chains))
+  }
+
+  test("clusters (distributed rounds) is identical under killed and re-run task attempts") {
+    distributedCC(sameUnderRetries(() => Dedup.clusters(chains)))
+  }
+
+  test("cleanCorpus is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Dedup.cleanCorpus(docs, "doc_id", "text", Params.JaccardMin, 0.3))
+  }
+}
