@@ -21,22 +21,21 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     // machine load at capture time: a loaded box inflates wall-clock >40%
-    // on this hardware, so the artifact must be self-identifying — a
-    // reader comparing rounds can reject a contaminated capture instead
-    // of concluding a regression (VERDICT r2 "what's wrong" #3).
+    // on this hardware, so the artifact must be self-identifying. The load
+    // average is context only: at main entry it still counts the
+    // launcher's compile and a previous capture's burn (an idle 4-core box
+    // read 1.78, back-to-back captures 3.0-4.0), so contention is judged
+    // on busyCores, sampled before the session starts
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
       catch { case _: Throwable => "" }
-    // sampled FIRST, before the session, the table warm-up and the
-    // canary: sampled after them, the 1-min load counts the bench's own
-    // full-width burn (a 4-core box read 2.99 idle), not outside load
     val loadBefore = loadavg()
+    val busyCores = outsideBusyCores()
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.localCpus()
     val spark = GraftSession.local(cpus)
-    val telemetry = ShuffleTelemetry.install(spark)
     // warm-up: touch every table once so no query's time includes
     // first-scan/codec/JVM initialization
     Tables.names.foreach { n =>
@@ -64,14 +63,13 @@ object Bench {
     // started at load 10.17 with canary 1.33-1.91 and recorded a 16x
     // "regression" with zero plan delta — a capture must DECLARE itself
     // contaminated instead of leaving the reader to reconstruct it).
-    // Contended: a 1-min load above half the requested cores before the
-    // session started, or an end canary above 1.25x the start canary
-    // (load arriving mid-capture). Both are judged against the host
+    // Contended: other processes kept more than half the requested cores
+    // busy while this JVM started, or an end canary above 1.25x the start
+    // canary (load arriving mid-capture). Both are judged against the host
     // itself — a fixed canary reference in seconds flagged every capture
     // on a slower box. ADDITIVE field only — nothing is skipped or
     // retimed, the flag just travels with the numbers.
-    val contendedStart =
-      loadBefore.split(",").headOption.flatMap(_.toDoubleOption).exists(_ > cpus / 2.0)
+    val contendedStart = busyCores.map(_ > cpus / 2.0)
     // optional subset for fast local iteration: SPARK_GRAFT_ONLY=q1,q2;
     // SPARK_GRAFT_SKIP excludes named queries (full-set captures on
     // boxes without headroom for a known disk-bound query — the skipped
@@ -88,18 +86,17 @@ object Bench {
     // per-query min stays clean
     val passes = (1 to runs).map { _ =>
       qlist.map { case (name, fn) =>
-        // shuffle/spill bytes bracket the TIMED section but the settle
-        // (listener-bus drain) runs after the timer stops, so telemetry
-        // never inflates the reported seconds
-        val snapBefore = ShuffleTelemetry.settle(telemetry, spark)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        val shuffle = ShuffleTelemetry.settle(telemetry, spark).delta(snapBefore)
+        // the timer runs inside the phase and the phase drains the
+        // listener bus after it, so telemetry never inflates the seconds
+        val ((elapsed, ok), work) = Observe.phase(spark, name) {
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+            }
+          ((System.nanoTime() - t0) / 1e9, ok)
+        }
         // drop every cached/locally-checkpointed block the query left in
         // the block manager: operators persist() and localCheckpoint()
         // internally and those blocks are dead once the noop write
@@ -111,44 +108,38 @@ object Bench {
         // one query per job; per-query isolation is the honest timing.
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        name -> ((elapsed, ok, shuffle))
+        name -> ((elapsed, ok, work))
       }.toMap
     }
     val results = qlist.map { case (name, _) =>
       val times = passes.map(_(name))
       // a crashed run's fast abort must not count as the query's time:
       // min over SUCCESSFUL runs; if none succeeded, report the slowest
-      // failure so a broken query can never look fast
-      val good = times.filter(_._2).map(_._1)
-      (name, if (good.nonEmpty) good.min else times.map(_._1).max, times)
+      // failure so a broken query can never look fast. Shuffle bytes come
+      // from the same run (bytes are plan-determined, but AQE can coalesce
+      // differently under memory pressure — the clean pass is the
+      // representative one)
+      val good = times.filter(_._2)
+      val (best, _, work) = if (good.nonEmpty) good.minBy(_._1) else times.maxBy(_._1)
+      (name, best, times, work)
     }
-    // shuffle bytes from each query's FASTEST successful pass (bytes are
-    // plan-determined, but AQE can coalesce differently under memory
-    // pressure — the clean pass is the representative one)
-    val shuffles: Map[String, ShuffleTelemetry.Snap] = qlist.map { case (name, _) =>
-      val runsFor = passes.map(_(name))
-      val good = runsFor.filter(_._2)
-      val pick = (if (good.nonEmpty) good.minBy(_._1) else runsFor.maxBy(_._1))._3
-      name -> pick
-    }.toMap
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
     // comma decimal separator (de_DE, fr_FR, …) would make the printed
     // line and the sidecar invalid JSON
     def r2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + r2(v) }
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + r2(v) }
       .mkString("{", ",", "}")
     // every individual run (not just the min) as [seconds, ok] pairs:
     // dispersion across runs is the in-artifact noise estimate, and a
     // failed run's fast abort must be distinguishable from a fast run
-    val ts = results.map { case (k, _, times) =>
+    val ts = results.map { case (k, _, times, _) =>
       "\"" + k + "\":[" +
         times.map { case (t, ok, _) => s"[$t,${if (ok) 1 else 0}]" }.mkString(",") + "]"
     }.mkString("{", ",", "}")
     // per-query shuffle telemetry: [read, write, spill_mem, spill_disk]
     // bytes from the representative pass — the scale audit column
-    val sh = results.map { case (k, _, _) =>
-      val s = shuffles(k)
-      "\"" + k + s"""\":[${s.read},${s.write},${s.spillMem},${s.spillDisk}]"""
+    val sh = results.map { case (k, _, _, s) =>
+      "\"" + k + s"""\":[${s.shuffleReadBytes},${s.shuffleWriteBytes},${s.spillMemBytes},${s.spillDiskBytes}]"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val canaryEnd = canary()
@@ -172,7 +163,7 @@ object Bench {
     // table as "32.6 s" (r9). A failed query's time is still reported
     // (slowest failure, above) but now carries a loud marker.
     val failedNames = results.collect {
-      case (k, _, times) if !times.exists(_._2) => k
+      case (k, _, times, _) if !times.exists(_._2) => k
     }
     def failedJson(names: Seq[String]): String =
       names.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -182,16 +173,16 @@ object Bench {
     // (rather than also by load): the 1-min load sampled right
     // after the bench's own full-width queries and canary counts that
     // self-load, not outside contention. A failed canary (the -1
-    // sentinel) leaves contention unknown, so the flag is null rather
-    // than a false "clean"
+    // sentinel) or an unreadable /proc leaves contention unknown, so the
+    // flag is null rather than a false "clean"
     val canaryOk = canaryStart >= 0 && canaryEnd >= 0
-    val contended =
-      if (canaryOk) (contendedStart || canaryEnd > 1.25 * canaryStart).toString else "null"
+    val contended = contendedStart.filter(_ => canaryOk)
+      .fold("null")(start => (start || canaryEnd > 1.25 * canaryStart).toString)
     val pw = new java.io.PrintWriter(detailFile, "UTF-8")
-    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","cpus":$cpus,"runs":$runs}""")
+    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"busy_cores":${busyCores.fold("null")(r2)},"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","cpus":$cpus,"runs":$runs}""")
     finally pw.close()
     val slow = results.sortBy(-_._2).take(25)
-      .map { case (k, v, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
+      .map { case (k, v, _, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
     // the PRINTED failed list is capped at 8 names: a mass-failure run
     // (wrong sfDir, starved heap — every query fails) would otherwise
     // blow the tail window and truncate the line into unparseable JSON
@@ -200,5 +191,26 @@ object Bench {
     val failedShown = failedJson(failedNames.take(8))
     println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"canary_ok":$canaryOk,"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","cpus":$cpus,"runs":$runs}""")
     spark.stop()
+  }
+
+  /** Cores other processes kept busy over 2 s: the busy jiffies of all
+    * cores in `/proc/stat` (all but idle and iowait) less this JVM's
+    * utime + stime (fields 14 and 15 of `/proc/self/stat`), per jiffy of
+    * one core. None when `/proc` cannot be read.
+    */
+  private def outsideBusyCores(): Option[Double] = {
+    def read(f: String) = { val src = scala.io.Source.fromFile(f); try src.mkString finally src.close() }
+    def sample() = {
+      val cpu = read("/proc/stat").linesIterator.filter(_.startsWith("cpu")).toSeq
+      val t = cpu.head.split("\\s+").slice(1, 9).map(_.toLong)
+      val own = read("/proc/self/stat").split("\\) ").last.split(" ")
+      (t.sum - t(3) - t(4), t.sum, own(11).toLong + own(12).toLong, cpu.size - 1)
+    }
+    try {
+      val (b0, a0, o0, cores) = sample()
+      Thread.sleep(2000L)
+      val (b1, a1, o1, _) = sample()
+      Some(math.max(0L, b1 - b0 - (o1 - o0)).toDouble * cores / math.max(1L, a1 - a0))
+    } catch { case _: Exception => None }
   }
 }

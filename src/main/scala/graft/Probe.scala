@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -15,8 +14,10 @@ import scala.jdk.CollectionConverters._
   *
   *  - `plan`: the `.explain("formatted")` loop, for eyeballing exchange
   *    reuse, join strategies and pushdown without editing code.
-  *  - `stages`: runs each query twice and prints the warm pass's
-  *    significant stages with task count and shuffle record fan-out —
+  *  - `stages`: runs each query twice, each run an [[Observe.phase]],
+  *    and prints the second (warm) run's significant stages with task
+  *    count and shuffle record fan-out, then the call site of each of
+  *    its stages that ran over 0.5 s on at most two tasks —
   *    the signature of the AQE blind spot where a join's INPUT is small
   *    enough to coalesce to one reducer but its OUTPUT fans out
   *    quadratically (found on dedup_prefix_filter r9: one 4.9 s
@@ -26,7 +27,10 @@ import scala.jdk.CollectionConverters._
   *    per-query total over joins. Wall-clock growth on K× data conflates
   *    engine efficiency with workload arithmetic; a candidate join that
   *    emits ~K² rows on K× data is doing quadratically more WORK, and the
-  *    engine verdict is whether seconds-per-row stays flat.
+  *    engine verdict is whether seconds-per-row stays flat. Row counts
+  *    live in the executed plans' SQL metrics, which no job or stage
+  *    event carries, so this mode reads them from a
+  *    `QueryExecutionListener` rather than from [[Observe.phase]].
   */
 object Probe {
 
@@ -64,44 +68,29 @@ object Probe {
   }
 
   /** Runs `query` into the noop sink and returns its wall seconds. */
-  private def timed(spark: SparkSession, query: () => DataFrame): Double = {
+  private def timed(query: () => DataFrame): Double = {
     val t0 = System.nanoTime()
     query().write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext, 10000L)
-    wall
+    (System.nanoTime() - t0) / 1e9
   }
 
   private def unpersistAll(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
 
-  private def stages(spark: SparkSession): (String, () => DataFrame) => Unit = {
-    val done =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val si = ev.stageInfo
-        val m = si.taskMetrics
-        val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-        if (m != null) done.add((si.stageId, wall, m.executorRunTime, si.numTasks,
-          m.shuffleReadMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten))
-        if (m != null && si.numTasks <= 2 && wall > 500L)
-          println(s"   [hot-stage detail] ${si.stageId} ${si.name}\n     ${si.details.linesIterator.take(12).mkString("\n     ")}")
-      }
-    })
-    (name, query) => {
-      timed(spark, query) // warm
-      unpersistAll(spark)
-      done.clear()
-      val wall = timed(spark, query)
-      println(f"== $name wall=$wall%.2f s")
-      done.asScala.toSeq.sortBy(-_._2).take(TopStages)
-        .filter(_._2 > MinStageMs).foreach { case (id, w, run, nt, sr, sw) =>
-          val flag = if (nt <= 2 && w > 500L) "  <-- LOW-PARALLELISM HOT STAGE" else ""
-          println(f"   stage $id%5d wall=${w / 1000.0}%6.2f s taskRun=${run / 1000.0}%7.2f s ntasks=$nt%3d srRec=$sr%9d swRec=$sw%9d$flag")
-        }
-      unpersistAll(spark)
+  private def stages(spark: SparkSession): (String, () => DataFrame) => Unit = (name, query) => {
+    Observe.phase(spark, s"$name warm")(timed(query))
+    unpersistAll(spark)
+    val (wall, work) = Observe.phase(spark, name)(timed(query))
+    println(f"== $name wall=$wall%.2f s")
+    def hot(s: Observe.Stage) = s.tasks <= 2 && s.wallMs > 500L
+    work.stages.sortBy(-_.wallMs).take(TopStages).filter(_.wallMs > MinStageMs).foreach { s =>
+      val flag = if (hot(s)) "  <-- LOW-PARALLELISM HOT STAGE" else ""
+      println(f"   stage ${s.id}%5d wall=${s.wallMs / 1000.0}%6.2f s taskRun=${s.runMs / 1000.0}%7.2f s ntasks=${s.tasks}%3d srRec=${s.shuffleRecordsRead}%9d swRec=${s.shuffleRecordsWritten}%9d$flag")
     }
+    work.stages.filter(hot).foreach { s =>
+      println(s"   [hot-stage detail] ${s.id} ${s.name}\n     ${s.details.linesIterator.take(12).mkString("\n     ")}")
+    }
+    unpersistAll(spark)
   }
 
   private def work(spark: SparkSession): (String, () => DataFrame) => Unit = {
@@ -134,7 +123,8 @@ object Probe {
       p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
     (name, query) => {
       qes.clear()
-      val wall = timed(spark, query)
+      // query execution events ride the listener bus, which the phase drains
+      val (wall, _) = Observe.phase(spark, name)(timed(query))
       unpersistAll(spark)
       val nodes = qes.asScala.toSeq.flatMap(qe => walk(qe.executedPlan))
         .distinctBy(System.identityHashCode(_))

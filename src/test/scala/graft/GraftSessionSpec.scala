@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.internal.SQLConf
-import scala.jdk.CollectionConverters._
 
 /** Pins the session graftbench builds (`GraftSession.local(cpus)`) and
   * keeps every main on the one factory, so a probe plans what the bench
@@ -25,12 +23,6 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("SparkSession.builder is called only in GraftSession.scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-    val callers = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(f => "SparkSession\\s*\\.\\s*builder".r.findFirstIn(Files.readString(f)).nonEmpty)
-      .map(_.getFileName.toString).toSeq
-    assert(callers === Seq("GraftSession.scala"))
+    assert(sourcesMatching("src/main/scala", "SparkSession\\s*\\.\\s*builder") === Seq("GraftSession.scala"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.ImdbPipeline
 
@@ -12,20 +12,8 @@ import graft.etl.ImdbPipeline
 class ImdbPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def titles = Seq(
-    // tconst, titleType, primaryTitle, originalTitle, isAdult, startYear, runtimeMinutes, genres
-    ("t1", "movie", "A", "A", "0", "1990", "100", "drama,comedy"),
-    ("t1", "movie", "A-dup", "A", "0", "1990", "100", "drama"), // dup key → dropped (keep first by tconst)
-    ("t2", "movie", "B", "B", "0", "1990", "\\N", "Drama"),     // genre normalizes to drama
-    ("t3", "short", "C", "C", "0", "1991", "10", "comedy"),     // filtered: not movie
-    ("t4", "movie", "D", "D", "0", "\\N", "90", "\\N"),         // null year + genres
-    ("t5", "movie", "E", "E", "0", "1991", "95", "thriller"),
-  ).toDF("tconst", "titleType", "primaryTitle", "originalTitle", "isAdult", "startYear", "runtimeMinutes", "genres")
-
-  private def ratings = Seq(
-    ("t1", "7.5", "5000"), ("t2", "6.0", "2000"), ("t3", "9.0", "100"),
-    ("t5", "8.0", "500"), // below minVotes for marts
-  ).toDF("tconst", "averageRating", "numVotes")
+  private def titles = ImdbPipelineSpec.titles(spark)
+  private def ratings = ImdbPipelineSpec.ratings(spark)
 
   private lazy val out = ImdbPipeline.run(titles, ratings, minVotes = 1000, topN = 10)
 
@@ -84,5 +72,31 @@ class ImdbPipelineSpec extends SparkSpec {
     assert(fact.count() === 3)
     assert(new java.io.File(s"$tmp/dw/fact_ratings").listFiles().exists(_.getName.startsWith("yearkey=")))
     assert(spark.read.parquet(s"$tmp/marts/mart_year_kpi").count() === 2)
+  }
+}
+
+/** The IMDb-shaped raw input of [[ImdbPipelineSpec]]: duplicate keys,
+  * null markers, a non-movie, an unrated movie and one below min votes.
+  */
+object ImdbPipelineSpec {
+  def titles(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      // tconst, titleType, primaryTitle, originalTitle, isAdult, startYear, runtimeMinutes, genres
+      ("t1", "movie", "A", "A", "0", "1990", "100", "drama,comedy"),
+      ("t1", "movie", "A-dup", "A", "0", "1990", "100", "drama"), // dup key → dropped (keep first by tconst)
+      ("t2", "movie", "B", "B", "0", "1990", "\\N", "Drama"),     // genre normalizes to drama
+      ("t3", "short", "C", "C", "0", "1991", "10", "comedy"),     // filtered: not movie
+      ("t4", "movie", "D", "D", "0", "\\N", "90", "\\N"),         // null year + genres
+      ("t5", "movie", "E", "E", "0", "1991", "95", "thriller"),
+    ).toDF("tconst", "titleType", "primaryTitle", "originalTitle", "isAdult", "startYear", "runtimeMinutes", "genres")
+  }
+
+  def ratings(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      ("t1", "7.5", "5000"), ("t2", "6.0", "2000"), ("t3", "9.0", "100"),
+      ("t5", "8.0", "500"), // below minVotes for marts
+    ).toDF("tconst", "averageRating", "numVotes")
   }
 }

@@ -1159,31 +1159,15 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("clusters on a small graph runs a fixed few Spark jobs, not per-round barriers") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // under the default conf a 64-node path is far below the size rule's
     // budget: the driver path's bounded probe (fill the edge cache, read
     // it back), never one-hop rounds of checkpoint + probe jobs
-    val sc = spark.sparkContext
-    val group = s"cc-job-count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    sc.addSparkListener(listener)
-    val got =
-      try {
-        sc.setJobGroup(group, "Dedup.clusters job count")
-        try Dedup.clusters(edges).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-        finally sc.clearJobGroup()
-      } finally {
-        org.apache.spark.graft.ListenerBusDrain.drain(sc, 10000L)
-        sc.removeSparkListener(listener)
-      }
+    val (got, work) = Observe.phase(spark, "Dedup.clusters job count") {
+      Dedup.clusters(edges).collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    }
     assert(got.toSeq === (0L to 63L).map(i => (i, 0L)))
-    assert(jobs.get() <= 3, s"Dedup.clusters on a 64-node path ran ${jobs.get()} jobs")
+    assert(work.jobs <= 3, s"Dedup.clusters on a 64-node path ran ${work.jobs} jobs")
   }
 
   test("clusters: driver union-find, distributed rounds and a BFS reference agree") {

@@ -8,13 +8,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkLis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.udf
 
-import graft.operators.Dedup
+import graft.etl.ImdbPipeline
+import graft.operators.{Dedup, Msf}
 
-/** The dedup pass returns the same rows when task attempts are killed and
-  * re-run: a listener kills the first attempt of every 3rd task, and each
-  * operator's rows must equal a clean run's. Each case also asserts that
-  * some attempt really ended `TaskKilled` and its task then succeeded on
-  * a later attempt — otherwise the comparison proves nothing.
+/** The dedup pass, the ETL pipeline and the spanning forest return the
+  * same rows when task attempts are killed and re-run: a listener kills
+  * the first attempt of every 3rd task, and each operator's rows must
+  * equal a clean run's. Each case also asserts that some attempt really
+  * ended `TaskKilled` and its task then succeeded on a later attempt —
+  * otherwise the comparison proves nothing.
   */
 class RetryDeterminismSpec extends SparkSpec {
   import spark.implicits._
@@ -41,15 +43,17 @@ class RetryDeterminismSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  /** Rows of `build()` on a clean run, then under the kill listener. */
-  private def sameUnderRetries(build: () => DataFrame): Unit = {
-    val clean = rows(build())
-    assert(clean.nonEmpty, "a case with no rows compares nothing")
+  /** Rows of each of `build()`'s outputs on a clean run, then under the
+    * kill listener.
+    */
+  private def sameUnderRetries(build: () => Seq[DataFrame]): Unit = {
+    val clean = build().map(rows)
+    assert(clean.forall(_.nonEmpty), "an output with no rows compares nothing")
     val sc = spark.sparkContext
     val killer = new KillEveryThirdTask
     sc.addSparkListener(killer)
     val retried =
-      try rows(build())
+      try build().map(rows)
       finally {
         org.apache.spark.graft.ListenerBusDrain.drain(sc, 10000L)
         sc.removeSparkListener(killer)
@@ -63,6 +67,8 @@ class RetryDeterminismSpec extends SparkSpec {
   // attempt is still running when its kill arrives over the listener bus
   private val heldText = udf((s: String) => { Thread.sleep(1); s })
   private val heldId = udf((x: Long) => { Thread.sleep(1); x })
+  // the pipeline fixture has 6 titles: hold each 50 ms instead
+  private val heldKey = udf((s: String) => { Thread.sleep(50); s })
 
   private def docs = Tables.load(spark, sfDir, "documents").repartition(4, $"doc_id")
     .withColumn("text", heldText($"text"))
@@ -71,23 +77,52 @@ class RetryDeterminismSpec extends SparkSpec {
   private def chains = spark.range(0L, 2000L, 1L, 8).where($"id" % 10 =!= 9L)
     .select(heldId($"id").as("doc_a"), ($"id" + 1L).as("doc_b"))
 
+  // the same chains as a weighted graph, weights distinct per edge
+  private def weightedChains = chains
+    .select($"doc_a".as("src"), $"doc_b".as("dst"), ($"doc_a" * 7919L % 10007L).as("w"))
+
   test("minhashCandidates is identical under killed and re-run task attempts") {
-    sameUnderRetries(() => Dedup.minhashCandidates(docs, "doc_id", "text"))
+    sameUnderRetries(() => Seq(Dedup.minhashCandidates(docs, "doc_id", "text")))
   }
 
   test("ngramJaccard is identical under killed and re-run task attempts") {
-    sameUnderRetries(() => Dedup.ngramJaccard(docs, "doc_id", "text", Params.JaccardMin))
+    sameUnderRetries(() => Seq(Dedup.ngramJaccard(docs, "doc_id", "text", Params.JaccardMin)))
   }
 
   test("clusters (driver path) is identical under killed and re-run task attempts") {
-    sameUnderRetries(() => Dedup.clusters(chains))
+    sameUnderRetries(() => Seq(Dedup.clusters(chains)))
   }
 
   test("clusters (distributed rounds) is identical under killed and re-run task attempts") {
-    distributedCC(sameUnderRetries(() => Dedup.clusters(chains)))
+    distributedCC(sameUnderRetries(() => Seq(Dedup.clusters(chains))))
   }
 
   test("cleanCorpus is identical under killed and re-run task attempts") {
-    sameUnderRetries(() => Dedup.cleanCorpus(docs, "doc_id", "text", Params.JaccardMin, 0.3))
+    sameUnderRetries(() => Seq(Dedup.cleanCorpus(docs, "doc_id", "text", Params.JaccardMin, 0.3)))
+  }
+
+  test("ImdbPipeline.run: all 9 outputs are identical under killed and re-run task attempts") {
+    val titles = ImdbPipelineSpec.titles(spark).repartition(3)
+      .withColumn("tconst", heldKey($"tconst"))
+    val ratings = ImdbPipelineSpec.ratings(spark).repartition(2)
+      .withColumn("tconst", heldKey($"tconst"))
+    sameUnderRetries(() => ImdbPipeline.run(titles, ratings, minVotes = 1000, topN = 10)
+      .productIterator.map(_.asInstanceOf[DataFrame]).toSeq)
+  }
+
+  test("msf (driver tail) is identical under killed and re-run task attempts") {
+    sameUnderRetries { () =>
+      val forest = Msf.msf(weightedChains)
+      assert(msfSides(forest) === ((false, true)))
+      Seq(forest)
+    }
+  }
+
+  test("msf (distributed rounds) is identical under killed and re-run task attempts") {
+    distributedCC(sameUnderRetries { () =>
+      val forest = Msf.msf(weightedChains)
+      assert(msfSides(forest) === ((true, false)))
+      Seq(forest)
+    })
   }
 }

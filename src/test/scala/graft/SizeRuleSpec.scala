@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -37,28 +36,11 @@ class SizeRuleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * shuffle exchanges left in its executed (final adaptive) plan.
     */
   private def run(df: DataFrame): (Seq[Row], Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"size-rule-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val rows =
-      try {
-        sc.setJobGroup(group, "SizeRule job count")
-        try df.collect().toSeq
-        finally sc.clearJobGroup()
-      } finally {
-        org.apache.spark.graft.ListenerBusDrain.drain(sc, 10000L)
-        sc.removeSparkListener(listener)
-      }
+    val (rows, work) = Observe.phase(spark, "SizeRule job count")(df.collect().toSeq)
     val shuffles = collectWithSubqueries(df.queryExecution.executedPlan) {
       case s: ShuffleExchangeExec => s
     }.size
-    (rows, jobs.get(), shuffles)
+    (rows, work.jobs, shuffles)
   }
 
   private def same(a: Seq[Row], b: Seq[Row]): Boolean =

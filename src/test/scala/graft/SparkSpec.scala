@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,6 +47,17 @@ trait SparkSpec extends AnyFunSuite {
     val leaves = forest.queryExecution.analyzed.collectLeaves()
     (leaves.exists(!_.isInstanceOf[LocalRelation]),
       leaves.exists(_.isInstanceOf[LocalRelation]))
+  }
+
+  /** File names of the `.scala` sources under `root`, a path from the
+    * repository root, whose text matches `pattern`, sorted.
+    */
+  def sourcesMatching(root: String, pattern: String): Seq[String] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    Files.walk(dir).iterator.asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && pattern.r.findFirstIn(Files.readString(f)).nonEmpty)
+      .map(_.getFileName.toString).sorted
   }
 
   private def withBroadcastThreshold[A](bytes: Long)(body: => A): A = {
