@@ -13,9 +13,10 @@ object Marts {
   /** Grouped KPI aggregate — count/avg/sum per group key
     * (reference: etl_imdb.py:196 `build_mart_year_kpi`). Two paths, picked
     * by [[SizeRule]]: when the leaves `df` reads fit
-    * `spark.sql.autoBroadcastJoinThreshold`, the input runs as one
-    * partition and the aggregate (and a caller's `orderBy`) plans no
-    * exchange — one Spark job for an interactive lookup. Otherwise
+    * `spark.sql.autoBroadcastJoinThreshold`, the input, joins included,
+    * runs as one task ([[SizeRule.onePartition]]) and the aggregate (and
+    * a caller's `orderBy`) plans no exchange — one Spark job for an
+    * interactive lookup. Otherwise
     * Spark's hash aggregate does map-side partial aggregation, so the
     * shuffle carries only (group, partial state) regardless of input
     * size. The paths can differ in the last bits of a floating `avg`
@@ -32,10 +33,11 @@ object Marts {
     *
     * Scale: two paths, picked by [[SizeRule]] on the pre-filtered input.
     * When its leaves fit `spark.sql.autoBroadcastJoinThreshold` it runs
-    * as one partition: the window (and a caller's `orderBy`) plans no
-    * exchange, so a small lookup is one job plus any broadcast of its
-    * join. Otherwise row_number over (group, order) is one shuffle; with
-    * AQE a skewed group splits into multiple reducers only for the
+    * as one task ([[SizeRule.onePartition]]): a join in the input is a
+    * shuffle-hash join inside that task, and neither it, the window nor a
+    * caller's `orderBy` plans an exchange or a broadcast, so a small
+    * lookup is one job. Otherwise row_number over (group, order) is one
+    * shuffle; with AQE a skewed group splits into multiple reducers only for the
     * pre-rank sort. Under the total order both paths return the same
     * rows. For small N a per-partition top-N pre-prune would cut the
     * exchange — noted as a future custom operator.

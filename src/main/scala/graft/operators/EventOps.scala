@@ -610,6 +610,12 @@ object EventOps {
         expr("(1000000L * w) div tw").as("credit_ppm"))
   }
 
+  /** Driver bytes one collected (src, dst, n) transition row counts in
+    * [[markovAttribution]]: the row with two short state names and a
+    * long, plus its map entry.
+    */
+  val TransitionRowBytes = 256L
+
   /** Markov-chain (removal-effect) attribution, Anderl et al.: model
     * session journeys as a first-order chain START → channels →
     * CONV/NULL, absorbed at the first conversion; a channel's credit is
@@ -631,7 +637,8 @@ object EventOps {
     * + one keyed aggregate over the events (the [[transitionMatrix]]
     * cost). The chain itself is (states+2)² counts — driver-side fold
     * over that bounded state is the [[Similarity]] k-means-centroid
-    * precedent, NOT a data-sized collect. Emits one row per channel:
+    * precedent, NOT a data-sized collect; [[SizeRule.collectCapped]]
+    * caps it at [[TransitionRowBytes]] a row. Emits one row per channel:
     * (channel, p_full_ppm, p_removed_ppm, effect_ppm, share_ppm).
     */
   def markovAttribution(events: DataFrame, userCol: String, tsCol: String,
@@ -661,8 +668,10 @@ object EventOps {
       .unionAll(kept
         .where(col("__next").isNull && col(typeCol) =!= convType)
         .select(col(typeCol).as("src"), lit("NULL").as("dst")))
-    val counts = trans.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val counts = SizeRule.collectCapped(
+        trans.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n")),
+        TransitionRowBytes, "markovAttribution transition counts")
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val rowTot = counts.groupBy(_._1._1).map { case (s, m) => s -> m.values.sum }
     val pPpm = counts.map { case ((s, d), n) => (s, d) -> n * 1000000L / rowTot(s) }
     def absorbP(removed: Option[String]): Long = {

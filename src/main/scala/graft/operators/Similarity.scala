@@ -85,7 +85,11 @@ object Similarity {
     val entries = array(cents.zipWithIndex.map { case (w, i) =>
       struct(V.dotConst(vecCol, w).as("d"), lit(-i).as("ni"))
     }: _*)
-    -array_max(entries).getField("ni")
+    // non-nullable on purpose: the max of a non-empty array of non-null
+    // structs is never null, but a nullable cell used as a join key gets
+    // an inferred isnotnull(cell) filter pushed below the projection, and
+    // that filter evaluates every centroid dot a second time per row
+    coalesce(-array_max(entries).getField("ni"), lit(0))
   }
 
   /** IVF cell id against the fixed md5-derived coarse quantizer. */
@@ -113,13 +117,21 @@ object Similarity {
     * corpus side never replicates). `nprobe` is the recall/cost knob:
     * nprobe = cents degrades gracefully to exact brute force.
     *
-    * Two plans, picked by [[SizeRule]]: when the leaves of `queries` and
-    * `corpus` together fit `spark.sql.autoBroadcastJoinThreshold`, both
-    * join inputs run as one partition and the cell join hashes the query
-    * side in the same task, so neither the join nor the per-query rank
-    * window plans an exchange or a broadcast: an interactive top-k is one
-    * Spark job. Larger inputs keep the distributed join and a query-keyed
-    * window. Both return the same rows.
+    * Two tiers, picked by [[SizeRule]], return the same rows and schema:
+    *  - Driver tier, when the leaves of `queries` and `corpus` together
+    *    fit `spark.sql.autoBroadcastJoinThreshold`, both id columns are
+    *    Long or Int and both vector columns are float or double arrays.
+    *    One job collects queries and corpus together, at most
+    *    [[SizeRule.driverRows]] rows at [[ivfRowBytes]] a row; the
+    *    driver assigns cells, scores the probed cells from primitive
+    *    arrays and returns a one-partition local relation, so a
+    *    caller's sort plans no exchange. This tier is EAGER: its job runs
+    *    when `ivfTopK` is called, not when the result is collected. A
+    *    collect over the cap, or a row it cannot reproduce bit for bit
+    *    (a null vector, a null element, a length other than the
+    *    centroids'), drops to the distributed tier.
+    *  - Distributed tier otherwise: the cell equi-join and a query-keyed
+    *    rank window, lazy like any DataFrame.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               k: Int, cents: Int = 8, dims: Int = 64, nprobe: Int = 1): DataFrame =
@@ -127,21 +139,33 @@ object Similarity {
 
   /** [[ivfTopK]] against an arbitrary (e.g. [[kmeansFit]]-trained)
     * centroid matrix — the production shape: train the coarse quantizer,
-    * then search with it. Same size rule and two plans as [[ivfTopK]].
+    * then search with it. Same two tiers, size rule and eagerness as
+    * [[ivfTopK]].
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   k: Int, ws: Seq[Seq[Double]], nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1 && nprobe <= ws.size, s"nprobe must be in [1, ${ws.size}]")
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+    IvfDriver.search(queries, corpus, idCol, vecCol, k, ws, nprobe)
+      .getOrElse(ivfDistributed(queries, corpus, idCol, vecCol, k, ws, nprobe))
+  }
+
+  /** Driver heap one collected (is_query, id, vector) row of `dims`
+    * elements of `elemBytes` counts against [[SizeRule.driverRows]]: the
+    * unsafe row (null word, three slots, array header and null word,
+    * 56 B up to 64 elements) and its elements, plus the driver's double
+    * copy of the vector.
+    */
+  def ivfRowBytes(dims: Int, elemBytes: Int): Long = 56L + dims.toLong * (elemBytes + 8)
+
+  /** The distributed tier of [[ivfTopKWith]]. */
+  private def ivfDistributed(queries: DataFrame, corpus: DataFrame, idCol: String,
+                             vecCol: String, k: Int, ws: Seq[Seq[Double]],
+                             nprobe: Int): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       V.norm(col(vecCol)).as("qn"),
       explode(probeCells(col(vecCol), ws, nprobe)).as("cell"))
-    val c0 = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
       cellFor(col(vecCol), ws).as("cell"))
-    // small: both sides in one partition, and the hash join builds on the
-    // query side inside the same task, so there is no broadcast job either
-    val (q, c) =
-      if (SizeRule.small(queries, corpus)) (q0.coalesce(1).hint("shuffle_hash"), c0.coalesce(1))
-      else (q0, c0)
     // no distinct needed: probe cells are distinct per query and each
     // corpus row lives in exactly one cell, so a (query, neighbor) pair
     // can only surface once. The corpus norm is taken after the join (the
@@ -604,15 +628,15 @@ object Similarity {
     * and `n_neg` — the count of points some other centroid claims.
     * Label centroids are per-dim round-4 means (the [[kmeansFit]]
     * portability contract); labels are bounded by definition, so the
-    * centroid table collects.
+    * centroid table collects, capped by [[SizeRule.collectCapped]] at
+    * 16 B a value (the boxed double and its slot).
     */
   def labelSilhouette(emb: DataFrame, labelCol: String, vecCol: String,
                       dims: Int): DataFrame = {
     val avgCols = (0 until dims).map(i =>
       round(avg(element_at(col(vecCol), i + 1)), 4).as(s"c$i"))
-    val cents = emb.groupBy(col(labelCol).cast("long").as("lab"))
-      .agg(avgCols.head, avgCols.tail: _*)
-      .collect()
+    val cents = SizeRule.collectCapped(emb.groupBy(col(labelCol).cast("long").as("lab"))
+        .agg(avgCols.head, avgCols.tail: _*), 16L * (dims + 1), "labelSilhouette centroids")
       .map(r => r.getLong(0) -> (0 until dims).map(i => r.getDouble(i + 1)))
       .sortBy(_._1)
     require(cents.size >= 2, "labelSilhouette needs at least two labels")

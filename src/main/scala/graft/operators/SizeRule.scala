@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.DatasetBridge
 
 /** The one "small enough" rule. Spark's broadcast budget,
   * `spark.sql.autoBroadcastJoinThreshold` (≤ 0 turns the rule off),
@@ -41,14 +42,19 @@ object SizeRule {
     b > 0 && !dfs.exists(_.isStreaming) && dfs.map(leafBytes).sum <= b
   }
 
-  /** `df` as `coalesce(1)` when [[small]], else unchanged. One partition
-    * is `SinglePartition`, which satisfies every clustered and ordered
-    * distribution, so no exchange is planned for a downstream aggregate,
-    * window, sort or join between two such inputs: a small interactive
-    * op runs as one job. Large inputs keep their distributed plans.
+  /** `df` run as one task when [[small]], else unchanged. The plan is
+    * rewritten from its cached-data form ([[DatasetBridge.inOneTask]]):
+    * every leaf is read as `coalesce(1)` (a persisted subtree stays its
+    * in-memory leaf), every join is a shuffle-hash join built inside the
+    * task, and the result is one partition. One partition is
+    * `SinglePartition`, which satisfies every clustered and ordered
+    * distribution, so no exchange is planned for a join, aggregate,
+    * window or sort over it, nor for a caller's sort on the result, and
+    * no join broadcasts: a small interactive op runs as one job. Large
+    * or unknown-size inputs keep their distributed plans.
     */
   def onePartition(df: DataFrame): DataFrame =
-    if (small(df)) df.coalesce(1) else df
+    if (small(df)) DatasetBridge.inOneTask(df) else df
 
   /** Rows a driver-side finish may collect: the broadcast budget at
     * `rowBytes` a row, capped by `heapBytes / DriverRowBytes` so a raised
@@ -63,6 +69,22 @@ object SizeRule {
     */
   def driverRows(spark: SparkSession, rowBytes: Long): Long =
     driverRows(budget(spark), Runtime.getRuntime.maxMemory, rowBytes)
+
+  /** All rows of `df`, a table with no distributed alternative (one row
+    * per label, per state pair), collected only when it has at most
+    * `cap` rows, else an error naming `what`. The cap is [[driverRows]]
+    * at `rowBytes` a row, or, with the budget off (≤ 0), the heap term
+    * alone; at most `cap` + 1 rows are read.
+    */
+  def collectCapped(df: DataFrame, rowBytes: Long, what: String): Array[Row] = {
+    val b = budget(df.sparkSession)
+    val cap = driverRows(if (b > 0) b else Long.MaxValue, Runtime.getRuntime.maxMemory, rowBytes)
+    val rows = df.limit(cap.toInt + 1).collect()
+    require(rows.length <= cap,
+      s"$what: more than $cap rows would be collected to the driver " +
+        s"(SizeRule.driverRows at $rowBytes B a row)")
+    rows
+  }
 
   /** Connected components of the graph with edges (`us(i)`, `vs(i)`),
     * on the driver: a union-find over primitive arrays. Node ids sit in

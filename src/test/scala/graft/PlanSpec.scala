@@ -70,6 +70,27 @@ class PlanSpec extends SparkSpec {
     assert(joins === 1, s"CC round must plan exactly one join, got $joins:\n$plan")
   }
 
+  test("distributed IVF evaluates the cell argmax once per corpus row") {
+    // a nullable cell join key gets an inferred isnotnull(cell) filter
+    // pushed below the projection that computes it: every centroid dot
+    // would then run twice per corpus row
+    import Params._
+    import org.apache.spark.sql.catalyst.expressions.ArrayMax
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val df = distributedCC {
+      val d = graft.operators.Similarity.ivfTopK(emb.filter($"vec_id" % AnnQueryMod === 0), emb,
+        "vec_id", "embedding", AnnK, IvfCells, EmbDims, IvfNprobe)
+      d.collect()
+      d
+    }
+    val plan = df.queryExecution.executedPlan
+    val argmaxes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p =>
+      p.expressions.map(_.collect { case a: ArrayMax => a }.size).sum
+    }.sum
+    assert(argmaxes === 1, s"one cell argmax per corpus row, got $argmaxes:\n$plan")
+  }
+
   test("brute-force ANN broadcasts the query side and rejects unbounded query sets") {
     val plan = explain("ann_brute_topk")
     assert(plan.contains("BroadcastNestedLoopJoin"),

@@ -8,10 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkLis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.udf
 
-import graft.etl.ImdbPipeline
-import graft.operators.{Dedup, Msf}
+import graft.etl.{ImdbPipeline, Marts}
+import graft.operators.{Dedup, Msf, Similarity}
 
-/** The dedup pass, the ETL pipeline and the spanning forest return the
+/** The dedup pass, the ETL pipeline, the spanning forest, IVF search
+  * and the one-task marts return the
   * same rows when task attempts are killed and re-run: a listener kills
   * the first attempt of every 3rd task, and each operator's rows must
   * equal a clean run's. Each case also asserts that some attempt really
@@ -108,6 +109,51 @@ class RetryDeterminismSpec extends SparkSpec {
       .withColumn("tconst", heldKey($"tconst"))
     sameUnderRetries(() => ImdbPipeline.run(titles, ratings, minVotes = 1000, topN = 10)
       .productIterator.map(_.asInstanceOf[DataFrame]).toSeq)
+  }
+
+  // the embeddings with each id held 1 ms, read from parquet so the
+  // optimizer cannot fold the hold into a local relation
+  private def heldEmb = Tables.load(spark, sfDir, "embeddings").withColumn("vec_id", heldId($"vec_id"))
+
+  /** Three IVF searches, one per nprobe: on the driver tier each runs one
+    * single-task collect, and of three consecutive task ids one is killed.
+    */
+  private def ivfSearches() = Seq(1, Params.IvfNprobe, Params.IvfCells).map { np =>
+    val emb = heldEmb
+    Similarity.ivfTopK(emb.filter($"vec_id" % Params.AnnQueryMod === 0), emb, "vec_id",
+      "embedding", Params.AnnK, Params.IvfCells, Params.EmbDims, np)
+  }
+
+  test("ivfTopK (driver tier) is identical under killed and re-run task attempts") {
+    sameUnderRetries { () =>
+      val out = ivfSearches()
+      assert(out.forall(_.queryExecution.analyzed.collectFirst {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty))
+      out
+    }
+  }
+
+  test("ivfTopK (distributed tier) is identical under killed and re-run task attempts") {
+    distributedCC(sameUnderRetries(() => ivfSearches()))
+  }
+
+  test("topNPerGroup over a joined input in one task is identical under killed and re-run task attempts") {
+    // parquet copies of the pipeline fixture: a scan, not a local relation
+    // the optimizer would evaluate on the driver, so the hold runs in a task
+    val dir = java.nio.file.Files.createTempDirectory("graft-retry-marts").toString
+    ImdbPipelineSpec.titles(spark).write.parquet(s"$dir/titles")
+    ImdbPipelineSpec.ratings(spark).write.parquet(s"$dir/ratings")
+    val titles = spark.read.parquet(s"$dir/titles").withColumn("tconst", heldKey($"tconst"))
+    val ratings = spark.read.parquet(s"$dir/ratings")
+    // three single-task lookups (one per vote floor), so one is killed
+    sameUnderRetries(() => Seq(0L, 1000L, 5000L).map { floor =>
+      val out = Marts.topNPerGroup(titles.join(ratings, "tconst"), Seq($"titleType"),
+        Seq($"numVotes".desc, $"tconst".asc), 2, Some($"numVotes" >= floor))
+      assert(out.queryExecution.analyzed.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.hint.leftHint }.flatten.nonEmpty,
+        "the small path hints its join")
+      out
+    })
   }
 
   test("msf (driver tail) is identical under killed and re-run task attempts") {
