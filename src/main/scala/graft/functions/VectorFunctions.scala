@@ -2,14 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Vector kernels over `array<float>` embedding columns.
   *
-  * Pure higher-order-function expressions (zip_with/aggregate/transform) —
-  * codegen-friendly, no UDF serialization, distributable to any scale.
-  * Elements are cast to double *before* arithmetic so the left-to-right
-  * fold is bit-identical across engines (float32 promotion first, then
-  * IEEE-754 double ops).
+  * The dot product and the rounded cosine are native codegen'd
+  * expressions ([[graft.plans.DotProduct]], [[graft.plans.Cosine4]]):
+  * no UDF serialization, inside whole-stage codegen, distributable to any
+  * scale. Elements are widened to double *before* arithmetic so the
+  * left-to-right fold is bit-identical across engines (float32 promotion
+  * first, then IEEE-754 double ops).
   */
 object VectorFunctions {
 
@@ -31,10 +33,16 @@ object VectorFunctions {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity rounded to 4dp (stable under sub-ULP fold-order
-    * differences between engines).
+    * differences between engines); a zero norm gives null.
     */
-  def cosine4(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 4)
+  def cosine4(a: Column, b: Column): Column = cosine4(dot(a, b), norm(a), norm(b))
+
+  /** The rounded cosine from a dot product and two norms a caller
+    * computed once per row: `round(dot / (na * nb), 4)` under Spark's
+    * non-ANSI rules whatever the ANSI setting ([[graft.plans.CosineKernel]]).
+    */
+  def cosine4(dot: Column, na: Column, nb: Column): Column = ColumnBridge.column(
+    graft.plans.Cosine4(ColumnBridge.expression(dot), ColumnBridge.expression(na), ColumnBridge.expression(nb)))
 
   /** Dot product against a constant weight vector (e.g. an LSH
     * hyperplane) — the weights become a literal array in the plan, so the

@@ -245,7 +245,10 @@ object Dedup {
     // join to ONE partition and runs the fan-out + partial aggregate
     // single-threaded (measured: 70% of the query's wall clock at
     // sf0.1). A user-specified count is exempt from AQE coalescing, so
-    // the fan-out keeps the session's full parallelism.
+    // the fan-out keeps the session's full parallelism. The index side
+    // is the hash build: unhinted, AQE broadcast whichever side's stage
+    // finished first, so the fan-out's shuffle bytes changed per run
+    // (78.8 or 85.2 MB for the same 5.1M rows at sf0.1).
     val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
     val probe = prefix.select(col("doc_id").as("doc_a"), col("sz").as("sza"),
       col("pos").as("pa"), col("h"))
@@ -254,7 +257,7 @@ object Dedup {
     val joined = touchIds match {
       case None =>
         probe.repartition(nPart, col("h"))
-          .join(index.repartition(nPart, col("h")), "h")
+          .join(index.repartition(nPart, col("h")).hint("shuffle_hash"), "h")
       case Some(ids) =>
         // pairs touching the sample = (probe∈S ⋈ full index) ∪
         // (full probe ⋈ index∈S); a both-in-S pair appears in both
@@ -787,11 +790,11 @@ object Dedup {
         col("ia.rep") === col("ib.rep") &&
         col(s"ia.$idCol") < col(s"ib.$idCol"))
       .select(col(s"ia.$idCol").as("id_a"), col(s"ib.$idCol").as("id_b"),
-        // the clique-constant self-cos dot(v,v)/(norm·norm): 1.0 to the
-        // 4-dp round for any NONZERO finite vector, and NaN for the
-        // all-zero (or NaN-carrying) vector — exactly what the oracle's
-        // per-pair cosine computes, so degenerate vectors stay in
-        // lockstep instead of being promoted to cos=1.0
+        // the clique-constant self-cos, the kernel at (v·v, ‖v‖, ‖v‖): 1.0
+        // to the 4-dp round for any NONZERO finite vector, null for the all-zero
+        // vector and NaN for a NaN-carrying one — exactly what the
+        // oracle's per-pair cosine computes, so degenerate vectors stay
+        // in lockstep instead of being promoted to cos=1.0
         col("ia.selfcos").as("cos"))
     val inter = repPairs
       .join(mm.select(col(idCol).as("ma"), col("rep").as("ra")), "ra")
@@ -832,11 +835,11 @@ object Dedup {
     val mrep = m.withColumn("rep",
         min(col(idCol)).over(Window.partitionBy(col(vecCol))))
       // clique-constant self-cosine (see scoredCandidatePairs' intra
-      // branch): 1.0 for any nonzero finite vector, NaN for degenerate
-      // ones — the same algebra the oracle applies to every pair
+      // branch): 1.0 for any nonzero finite vector, null for the all-zero
+      // vector, NaN for a NaN-carrying one — the same algebra the oracle
+      // applies to every pair
       .withColumn("selfcos",
-        round(V.dot(col(vecCol), col(vecCol))
-          / (V.norm(col(vecCol)) * V.norm(col(vecCol))), 4))
+        V.cosine4(V.dot(col(vecCol), col(vecCol)), V.norm(col(vecCol)), V.norm(col(vecCol))))
       .localCheckpoint(false)
     val reps = mrep.where(col("rep") === col(idCol))
     // pin the probe join's parallelism on its key (the signaturePairs
@@ -858,7 +861,7 @@ object Dedup {
     val vb = reps.select(col(idCol).as("id_b"), col(vecCol).as("vb"), V.norm(col(vecCol)).as("nb"))
     val repPairs = pairs.join(va, "id_a").join(vb, "id_b")
       .select(col("id_a").as("ra"), col("id_b").as("rb"),
-        round(V.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cos"))
+        V.cosine4(V.dot(col("va"), col("vb")), col("na"), col("nb")).as("cos"))
     (mrep.select(col(idCol), col("rep"), col("selfcos")), repPairs)
   }
 
@@ -936,16 +939,16 @@ object Dedup {
     val pairs = a.join(b, Seq("cell"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        round(V.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cos"))
+        V.cosine4(V.dot(col("va"), col("vb")), col("na"), col("nb")).as("cos"))
       .where(col("cos") >= minCos)
     val cl = clusters(pairs.select(col("doc_a"), col("doc_b")))
     // cosine to the OWN cell's centroid: all centroid dots are literal
-    // expressions; element_at picks the assigned cell's value
+    // expressions; element_at picks the assigned cell's dot and norm, so
+    // the row is scored once
+    def ofCell(xs: Seq[Column]) = element_at(array(xs: _*), (col("cell") + 1).cast("int"))
     val dcent = asg.select(col("doc_id"),
-      round(element_at(
-          array(cents.zip(centNorm).map { case (w, nw) =>
-            V.dotConst(col("v"), w) / (col("nv") * lit(nw)) }: _*),
-          (col("cell") + 1).cast("int")), 4).as("dcent"))
+      V.cosine4(ofCell(cents.map(V.dotConst(col("v"), _))), col("nv"), ofCell(centNorm.map(lit)))
+        .as("dcent"))
     val scored = cl.join(dcent, "doc_id")
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("dcent").desc, col("doc_id").asc)

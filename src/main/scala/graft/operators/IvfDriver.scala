@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types._
+import graft.plans.CosineKernel
 
 /** The driver tier of [[Similarity.ivfTopKWith]]: queries and corpus are
   * collected in one job and searched from primitive arrays, with the
@@ -17,9 +18,9 @@ import org.apache.spark.sql.types._
   *    number, -0.0 equal to 0.0);
   *  - a query probes the `nprobe` cells with the smallest negated dot
   *    (so a NaN dot is probed last), lowest index first on ties;
-  *  - cos = round(dot / (qn · nn), 4), rounded HALF_UP through the
-  *    double's decimal string as Spark's `round` does; a zero divisor is
-  *    a null cos, or (under ANSI mode, where Spark raises) a fallback;
+  *  - cos = round(dot / (qn · nn), 4) by the distributed tier's own
+  *    kernel, [[graft.plans.CosineKernel]]: a zero norm product is a null
+  *    cos, whatever the ANSI setting;
   *  - per query id value, rows rank by cos desc (NaN first, null last),
   *    then neighbor id asc; a neighbor with the query's id is skipped and
   *    a row with a null id can neither query nor match.
@@ -89,7 +90,6 @@ private[operators] object IvfDriver {
     val norm = new Array[Double](live.length)
     for (n <- live.indices) norm(n) = math.sqrt(dot(vecs, n * dims, vecs, n * dims))
 
-    val zeroIsNull = !spark.sessionState.conf.ansiEnabled
     val hits = mutable.LongMap.empty[mutable.ArrayBuffer[(java.lang.Double, Long)]]
     for (qn <- qs) {
       val qid = ids(qn)
@@ -99,12 +99,8 @@ private[operators] object IvfDriver {
         c < 0 || (c == 0 && a < b)
       }.take(nprobe)
       val buf = hits.getOrElseUpdate(qid, mutable.ArrayBuffer.empty)
-      for (cell <- probed; cn <- byCell.getOrElse(cell, Nil) if ids(cn) != qid) {
-        val div = norm(qn) * norm(cn)
-        if (div == 0.0 && !zeroIsNull) return None
-        val cos = if (div == 0.0) null else java.lang.Double.valueOf(round4(dot(vecs, qn * dims, vecs, cn * dims) / div))
-        buf += ((cos, ids(cn)))
-      }
+      for (cell <- probed; cn <- byCell.getOrElse(cell, Nil) if ids(cn) != qid)
+        buf += ((CosineKernel.cos4OrNull(dot(vecs, qn * dims, vecs, cn * dims), norm(qn), norm(cn)), ids(cn)))
     }
 
     def typed(t: DataType, v: Long): Any = if (t == IntegerType) v.toInt else v
@@ -133,11 +129,4 @@ private[operators] object IvfDriver {
       else compareDoubles(b._1, a._1)
     c < 0 || (c == 0 && a._2 < b._2)
   }
-
-  /** Spark's `round(x, 4)` on a double: NaN and infinities pass through,
-    * anything else rounds HALF_UP from its shortest decimal string.
-    */
-  private def round4(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 }

@@ -67,7 +67,7 @@ object Similarity {
     val scored = q.crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(V.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 4).as("cos"))
+        V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
   }
@@ -117,7 +117,9 @@ object Similarity {
     * corpus side never replicates). `nprobe` is the recall/cost knob:
     * nprobe = cents degrades gracefully to exact brute force.
     *
-    * Two tiers, picked by [[SizeRule]], return the same rows and schema:
+    * Two tiers, picked by [[SizeRule]], return the same rows and schema,
+    * both scoring with [[graft.plans.CosineKernel]] (a zero-norm vector
+    * scores a null cos and a NaN one NaN, whatever the ANSI setting):
     *  - Driver tier, when the leaves of `queries` and `corpus` together
     *    fit `spark.sql.autoBroadcastJoinThreshold`, both id columns are
     *    Long or Int and both vector columns are float or double arrays.
@@ -139,8 +141,8 @@ object Similarity {
 
   /** [[ivfTopK]] against an arbitrary (e.g. [[kmeansFit]]-trained)
     * centroid matrix — the production shape: train the coarse quantizer,
-    * then search with it. Same two tiers, size rule and eagerness as
-    * [[ivfTopK]].
+    * then search with it. Same two tiers, size rule, scoring and
+    * eagerness as [[ivfTopK]].
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                   k: Int, ws: Seq[Seq[Double]], nprobe: Int = 1): DataFrame = {
@@ -175,7 +177,7 @@ object Similarity {
     val scored = q.join(c, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(V.dot(col("qv"), col("nv")) / (col("qn") * V.norm(col("nv"))), 4).as("cos"))
+        V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), V.norm(col("nv"))).as("cos"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
   }
@@ -420,7 +422,7 @@ object Similarity {
     val cand = qb.join(cb, Seq("band_id", "bv"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(V.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 4).as("cos"))
+        V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
       .repartition(nPart, col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id")).agg(max(col("cos")).as("cos"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
@@ -489,7 +491,7 @@ object Similarity {
       col(vecCol).as("nv"), V.norm(col(vecCol)).as("nn"))
     val sc = cand.join(qv, "query_id").join(nv, "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
-        round(V.dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 4).as("cos"))
+        V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     sc.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)

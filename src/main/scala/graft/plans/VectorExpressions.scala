@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -195,6 +195,64 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Static kernel for [[Cosine4]], also called by the driver tier of IVF
+  * search: the rounded cosine `round(dot / (na · nb), 4)` that every ANN
+  * and embedding near-dup operator scores with, from a dot product and
+  * the two norms, each computed once per row by the caller. It has
+  * Spark's non-ANSI semantics whatever the session's ANSI setting, which
+  * are also the DuckDB oracle's: a zero norm product (a zero norm, or a
+  * product that underflows) is a null cos rather than a raise, and the
+  * quotient rounds HALF_UP from the double's shortest decimal string as
+  * Spark's `round` does, so NaN and infinities pass through and -0.0
+  * rounds to 0.0.
+  */
+object CosineKernel {
+  /** Whether the cos of norms `na`, `nb` is null: their product is zero. */
+  def isNull(na: Double, nb: Double): Boolean = na * nb == 0.0
+
+  /** The rounded cosine where [[isNull]] does not hold. */
+  def cos4(dot: Double, na: Double, nb: Double): Double = {
+    val x = dot / (na * nb)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  /** [[cos4]] boxed, or null where [[isNull]] holds. */
+  def cos4OrNull(dot: Double, na: Double, nb: Double): java.lang.Double =
+    if (isNull(na, nb)) null else cos4(dot, na, nb)
+}
+
+/** The rounded cosine of a dot product and two norms as one codegen'd
+  * expression: its generated code calls [[CosineKernel]] (the
+  * `NfcNormalize` pattern), so no `Divide` is planned and the ANSI
+  * setting cannot turn a zero norm into a raise. Any null input is null.
+  */
+case class Cosine4(dot: Expression, na: Expression, nb: Expression)
+    extends TernaryExpression with ImplicitCastInputTypes {
+
+  override def first: Expression = dot
+  override def second: Expression = na
+  override def third: Expression = nb
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_cos4"
+
+  override def nullSafeEval(d: Any, a: Any, b: Any): Any =
+    CosineKernel.cos4OrNull(d.asInstanceOf[Double], a.asInstanceOf[Double], b.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (d, a, b) =>
+      s"""
+         |if (graft.plans.CosineKernel.isNull($a, $b)) { ${ev.isNull} = true; }
+         |else { ${ev.value} = graft.plans.CosineKernel.cos4($d, $a, $b); }
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(newFirst: Expression, newSecond: Expression,
+                                                 newThird: Expression): Expression =
+    copy(dot = newFirst, na = newSecond, nb = newThird)
 }
 
 object VectorExpressions {

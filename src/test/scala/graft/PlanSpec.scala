@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Plan-quality audit: the properties that decide 100 TB behavior —
@@ -357,6 +358,16 @@ class PlanSpec extends SparkSpec {
       s"exact similarity join must stay keyed end to end:\n$plan")
     assert(plan.contains("partial_min"),
       s"candidate aggregate should do map-side partial min of positions:\n$plan")
+    // the fan-out join on the prefix token builds the index side in the
+    // shuffle, run after run: AQE may not broadcast whichever side's
+    // stage happened to finish first
+    df.collect()
+    val joins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.HashJoin
+          if j.leftKeys.exists(_.references.exists(_.name == "h")) => j
+    }
+    assert(joins.map(j => (j.getClass.getSimpleName, j.buildSide.toString)) ===
+      Seq(("ShuffledHashJoinExec", "BuildRight")), s"${df.queryExecution.executedPlan}")
   }
 
   test("quantile sketch partial-aggregates map-side; union never rescans the base") {

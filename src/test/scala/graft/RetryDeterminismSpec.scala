@@ -6,14 +6,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.{Success, TaskKilled}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{udf, when}
 
 import graft.etl.{ImdbPipeline, Marts}
-import graft.operators.{Dedup, Msf, Similarity}
+import graft.operators.{Dedup, Joins, Msf, Similarity}
 
-/** The dedup pass, the ETL pipeline, the spanning forest, IVF search
-  * and the one-task marts return the
-  * same rows when task attempts are killed and re-run: a listener kills
+/** The dedup pass, the ETL pipeline, the spanning forest, IVF search,
+  * the one-task marts and the salted join return the same rows when
+  * task attempts are killed and re-run: a listener kills
   * the first attempt of every 3rd task, and each operator's rows must
   * equal a clean run's. Each case also asserts that some attempt really
   * ended `TaskKilled` and its task then succeeded on a later attempt —
@@ -154,6 +154,19 @@ class RetryDeterminismSpec extends SparkSpec {
         "the small path hints its join")
       out
     })
+  }
+
+  test("saltedJoin with its default salt over a skewed key is identical under killed and re-run task attempts") {
+    // 90% of the big side on key 0, hash-shuffled before the join so the
+    // default salt (monotonically_increasing_id) numbers rows in the
+    // order a re-run task reads them
+    sameUnderRetries { () =>
+      val big = spark.range(0L, 4000L, 1L, 8)
+        .select(heldId($"id").as("id"), when($"id" % 10 === 0, $"id").otherwise(0L).as("k"))
+        .repartition(4, $"id")
+      val small = spark.range(0L, 4000L, 10L, 2).select($"id".as("k"), ($"id" * 3).as("v"))
+      Seq(Joins.saltedJoin(big, small, Seq("k"), saltFactor = 8))
+    }
   }
 
   test("msf (driver tail) is identical under killed and re-run task attempts") {
