@@ -3673,11 +3673,6 @@ object Oracles {
        |  CAST((CAST(sum($cents) AS BIGINT) * 100) // count(*) AS BIGINT) AS mean_centicents
        |FROM orders GROUP BY 1""".stripMargin
 
-  /** Fixed-point int64 PageRank, iterations unrolled as a CTE chain from
-    * the same constants as [[graft.operators.PageRank]] — every transfer
-    * an integer floor-division, every combine an exact BIGINT sum, so
-    * Spark and DuckDB agree bit-for-bit.
-    */
   /** pageRankWeighted twin: the same generated-round replay as
     * [[qPagerank]] with weighted shares `(pr·85·w) // (100·Σw_src)`;
     * the symmetric trading graph has no sinks, so no dangling CTE —
@@ -3710,6 +3705,11 @@ object Oracles {
        |SELECT node, pr FROM pr$PrIters""".stripMargin
   }
 
+  /** Fixed-point int64 PageRank, iterations unrolled as a CTE chain from
+    * the same constants as [[graft.operators.PageRank]] — every transfer
+    * an integer floor-division, every combine an exact BIGINT sum, so
+    * Spark and DuckDB agree bit-for-bit.
+    */
   def qPagerank: String = {
     val u = graft.operators.PageRank.MassUnit
     val iters = (1 to PrIters).map { k =>

@@ -503,16 +503,27 @@ object Dedup {
     */
   def keepBestInCluster(docs: DataFrame, idCol: String, textCol: String,
                         minJaccard: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cl = clusters(ngramJaccard(docs, idCol, textCol, minJaccard))
     val scored = cl.join(
       docs.select(col(idCol).as("doc_id"), T.qualityScore(col(textCol)).as("q")), "doc_id")
-    val w = Window.partitionBy(col("cluster_id")).orderBy(col("q").desc, col("doc_id").asc)
+    keepBest(scored, "q", "keep_q", "n_docs")
+  }
+
+  /** One row per cluster of `scored` (cluster_id, doc_id, `score`): the
+    * member ranked first by `score` desc, ties → smallest id, as
+    * `keep_id`, its score as `keepScore`, and the member count as
+    * `nCol`. The window partitions on the cluster id, so it shuffles
+    * cluster members only.
+    */
+  private def keepBest(scored: DataFrame, score: String, keepScore: String,
+                       nCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("cluster_id")).orderBy(col(score).desc, col("doc_id").asc)
     scored.withColumn("__rk", row_number().over(w))
       .groupBy(col("cluster_id"))
       .agg(min(when(col("__rk") === 1, col("doc_id"))).as("keep_id"),
-        min(when(col("__rk") === 1, col("q"))).as("keep_q"),
-        count(lit(1)).as("n_docs"))
+        min(when(col("__rk") === 1, col(score))).as(keepScore),
+        count(lit(1)).as(nCol))
   }
 
   /** C4-style cleaning composition: drop non-canonical near-dups (docs
@@ -924,7 +935,6 @@ object Dedup {
     */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     cents: Seq[Seq[Double]], minCos: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // per-centroid norms as Scala literals: same left-fold order as the
     // oracle's SQL sum, so the rounded cosine is engine-identical
     val centNorm = cents.map(w => math.sqrt(w.map(x => x * x).sum))
@@ -949,14 +959,7 @@ object Dedup {
     val dcent = asg.select(col("doc_id"),
       V.cosine4(ofCell(cents.map(V.dotConst(col("v"), _))), col("nv"), ofCell(centNorm.map(lit)))
         .as("dcent"))
-    val scored = cl.join(dcent, "doc_id")
-    val w = Window.partitionBy(col("cluster_id"))
-      .orderBy(col("dcent").desc, col("doc_id").asc)
-    scored.withColumn("__rk", row_number().over(w))
-      .groupBy(col("cluster_id"))
-      .agg(min(when(col("__rk") === 1, col("doc_id"))).as("keep_id"),
-        min(when(col("__rk") === 1, col("dcent"))).as("keep_cos"),
-        count(lit(1)).as("n_vecs"))
+    keepBest(cl.join(dcent, "doc_id"), "dcent", "keep_cos", "n_vecs")
   }
 
   /** Exact duplicate-span audit (the substring-level dedup signal of Lee

@@ -34,6 +34,15 @@ object Similarity {
     emb.select(col(idCol), col(vecCol), array(bandvals: _*).as("bandvals"))
   }
 
+  /** Each query's `k` best (query_id, neighbor_id) rows by `score` desc,
+    * ties to the smaller neighbor id — a total order, so the cut is
+    * reproducible across engines — with the 1-based long rank `rnk`.
+    */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+  }
+
   /** Exact cosine top-k for each query row against the whole corpus.
     * Rank order is total — (cosine desc, neighbor id asc) — so results are
     * reproducible across engines. Self-matches are excluded.
@@ -68,8 +77,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(scored, "cos", k)
   }
 
   /** Cell argmax over arbitrary centroid weights (deterministic
@@ -178,8 +186,7 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), V.norm(col("nv"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(scored, "cos", k)
   }
 
   /** One column per (subspace m, code ci): the MIPS score
@@ -300,8 +307,7 @@ object Similarity {
       .join(codes.select(col(idCol).as("neighbor_id"), col("m"), col("code")),
         Seq("m", "code"))
       .where(col("query_id") =!= col("neighbor_id")), mSub)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(scored, "score", k)
   }
 
   /** IVF+PQ (the canonical billion-scale ANN index, à la FAISS IVFPQ):
@@ -333,9 +339,14 @@ object Similarity {
     val lut = pqLut(queries, idCol, vecCol, mSub, ksub, dims)
     val scored = adcScore(cand.join(codes, "neighbor_id")
       .join(lut, Seq("query_id", "m", "code")), mSub)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(scored, "score", k)
   }
+
+  /** Half-up rounding to 4 decimals: the grid [[kmeansFit]] and
+    * [[topComponent]] snap their driver-side trajectories to.
+    */
+  private def r4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Lloyd's k-means over the corpus, iterated to convergence (or
     * `maxIter`). Returns (centroids, last-assignment counts, iterations
@@ -355,18 +366,11 @@ object Similarity {
     */
   def kmeansFit(emb: DataFrame, vecCol: String, init: Seq[Seq[Double]], dims: Int,
                 maxIter: Int, tol: Double = 0.0): (Seq[Seq[Double]], Seq[Long], Int) = {
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     // measured: caching the projected vectors for the eager loop moved
     // nothing (the cost is the assignment expression, not the re-scan),
     // and a transient persist would race any concurrent cache-hygiene
     // assertion — so the loop re-reads the source per round on purpose
-    kmeansLoop(emb.select(col(vecCol)), vecCol, init, dims, maxIter, tol, r4)
-  }
-
-  private def kmeansLoop(vecs: DataFrame, vecCol: String, init: Seq[Seq[Double]],
-                         dims: Int, maxIter: Int, tol: Double,
-                         r4: Double => Double): (Seq[Seq[Double]], Seq[Long], Int) = {
+    val vecs = emb.select(col(vecCol))
     var cents = init
     var counts = Seq.fill(init.size)(0L)
     var iter = 0
@@ -425,8 +429,7 @@ object Similarity {
         V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
       .repartition(nPart, col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id")).agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(cand, "cos", k)
   }
 
   /** Scalar quantization to int8 codes (SQ8): per-dimension affine
@@ -492,9 +495,7 @@ object Similarity {
     val sc = cand.join(qv, "query_id").join(nv, "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         V.cosine4(V.dot(col("qv"), col("nv")), col("qn"), col("nn")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    sc.withColumn("rnk", row_number().over(w).cast("long")).where(col("rnk") <= k)
+    topKPerQuery(sc, "cos", k)
   }
 
   /** Johnson–Lindenstrauss random projection: compress `dims`-d
@@ -561,23 +562,6 @@ object Similarity {
         col("n_hit"), expr("n_hit * 1000000L div n_exact").as("recall_ppm")))
   }
 
-  /** Centroid-silhouette clustering audit: per point, a = L2 distance
-    * to the NEAREST centroid (= its cluster under min-distance
-    * assignment), b = distance to the runner-up;
-    * `s = (b − a) / max(a, b) ∈ [0, 1]` here (the medoid simplification
-    * of full silhouette — O(n·k) instead of O(n²), the only version
-    * that scales), floor-scaled e6 per point so per-cell means are
-    * exact integer sums. One row per non-empty cell:
-    * `(cell, n, mean_sil_e6, min_sil_e6)` — low mean = mushy cluster,
-    * low min = boundary points the assignment barely claims.
-    *
-    * Portability: centroid coordinates arrive as r4-rounded literals
-    * (the [[kmeansFit]] output contract), each distance is ONE
-    * left-associated IEEE sum replayed token-order-identical by the
-    * twin, and the (d, cell) argmin/runner-up come from ONE row-wise
-    * `array_sort` over struct entries — no shuffle before the final
-    * per-cell aggregate.
-    */
   /** Top principal direction by distributed power iteration — the
     * first step of PCA without ever materializing the d×d covariance:
     * each round is ONE aggregate pass computing
@@ -593,8 +577,6 @@ object Similarity {
   def topComponent(emb: DataFrame, vecCol: String, dims: Int,
                    iters: Int): (Seq[Double], Double) = {
     require(dims >= 2 && iters >= 1)
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     // the emptiness guard must run BEFORE the mean collect: on zero
     // rows avg() is null and Row.getDouble would NPE past the require
     val n = emb.count()
@@ -667,6 +649,23 @@ object Similarity {
         col("min_sil_e6"), col("n_neg"))
   }
 
+  /** Centroid-silhouette clustering audit: per point, a = L2 distance
+    * to the NEAREST centroid (= its cluster under min-distance
+    * assignment), b = distance to the runner-up;
+    * `s = (b − a) / max(a, b) ∈ [0, 1]` here (the medoid simplification
+    * of full silhouette — O(n·k) instead of O(n²), the only version
+    * that scales), floor-scaled e6 per point so per-cell means are
+    * exact integer sums. One row per non-empty cell:
+    * `(cell, n, mean_sil_e6, min_sil_e6)` — low mean = mushy cluster,
+    * low min = boundary points the assignment barely claims.
+    *
+    * Portability: centroid coordinates arrive as r4-rounded literals
+    * (the [[kmeansFit]] output contract), each distance is ONE
+    * left-associated IEEE sum replayed token-order-identical by the
+    * twin, and the (d, cell) argmin/runner-up come from ONE row-wise
+    * `array_sort` over struct entries — no shuffle before the final
+    * per-cell aggregate.
+    */
   def silhouette(emb: DataFrame, vecCol: String, cents: Seq[Seq[Double]],
                  dims: Int): DataFrame = {
     require(cents.size >= 2, "silhouette needs at least two centroids")

@@ -37,15 +37,8 @@ object Sssp {
     * (node, dist) for every node reachable within `maxRounds` edges of
     * any seed; seeds are dist 0.
     */
-  /** `checkpointRounds = false` is for plan audits only: it leaves the
-    * full multi-round lineage visible (and re-computes shared stages),
-    * exactly like [[PageRank.pageRank]]'s flag.
-    */
-  def weightedDistances(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-                        checkpointRounds: Boolean = true): DataFrame = {
+  def weightedDistances(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "need at least one relaxation round")
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointRounds) df.localCheckpoint(false) else df
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("w").cast("long")).localCheckpoint(false)
     var dist = seeds.select(col("node").cast("long"), lit(0L).as("dist"))
@@ -54,20 +47,28 @@ object Sssp {
     var round = 0
     var done = false
     while (round < maxRounds && !done) {
-      val relax = frontier.join(e, col("node") === col("src"))
-        .select(col("dst"), (col("dist") + col("w")).as("cand"))
-        .groupBy(col("dst").as("node")).agg(min(col("cand")).as("cand"))
-      val improved = cp(relax.join(dist, Seq("node"), "left")
-        .where(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("node"), col("cand").as("dist"))) // 3 consumers: probe, update, frontier
+      // 3 consumers: probe, update, frontier
+      val improved = relax(e, frontier, dist).localCheckpoint(false)
       if (improved.isEmpty) done = true
       else {
-        dist = cp(dist.join(improved, Seq("node"), "left_anti")
-          .unionByName(improved))
+        dist = dist.join(improved, Seq("node"), "left_anti").unionByName(improved)
+          .localCheckpoint(false)
         frontier = improved
       }
       round += 1
     }
     dist
   }
+
+  /** One relaxation round: the `frontier` ⋈ `e` candidates `dist + w`,
+    * min per target, kept where they beat the known `dist` (or reach a
+    * new node). Returns the improved (node, dist) rows.
+    */
+  private[graft] def relax(e: DataFrame, frontier: DataFrame, dist: DataFrame): DataFrame =
+    frontier.join(e, col("node") === col("src"))
+      .select(col("dst"), (col("dist") + col("w")).as("cand"))
+      .groupBy(col("dst").as("node")).agg(min(col("cand")).as("cand"))
+      .join(dist, Seq("node"), "left")
+      .where(col("dist").isNull || col("cand") < col("dist"))
+      .select(col("node"), col("cand").as("dist"))
 }

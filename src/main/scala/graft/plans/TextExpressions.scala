@@ -106,21 +106,3 @@ case class MinhashBandKeys(child: Expression, k: Int, bands: Int)
   override protected def withNewChildInternal(newChild: Expression): MinhashBandKeys =
     copy(child = newChild)
 }
-
-object TextExpressions {
-  /** Session-level SQL registration (the extensions path in
-    * [[GraftExtensions]] covers `spark.sql.extensions` users).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nfc"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1)))
-  }
-}

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -263,16 +264,6 @@ object VectorExpressions {
   /** Column wrapper for [[SortedIntersectCount]]. */
   def sortedIntersectNative(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL-side registration: `SELECT graft_dot(a, b)`. Safe to call on any
-    * session (idempotent); also installable cluster-wide via
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)))
 }
 
 /** `spark.sql.extensions` entry point injecting the graft SQL functions
@@ -280,18 +271,29 @@ object VectorExpressions {
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children(0))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => LevenshteinPrefilterRule)
   }
+}
+
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_ <: Expression])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** The graft SQL functions, one (name, builder) each: [[register]] and
+    * the `spark.sql.extensions` injection both walk this table.
+    */
+  private val functions = Seq(
+    fn("graft_dot", classOf[DotProduct])(c => DotProduct(c(0), c(1))),
+    fn("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c(0))),
+    fn("graft_jaro_winkler", classOf[JaroWinkler])(c => JaroWinkler(c(0), c(1))))
+
+  /** SQL-side registration on one session: `SELECT graft_dot(a, b)`,
+    * `graft_nfc(s)`, `graft_jaro_winkler(a, b)`. Safe to call on any
+    * session (idempotent).
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }

@@ -1356,6 +1356,21 @@ class OperatorsSpec extends SparkSpec {
     assert(total > 0.99 && total <= 1.0, s"mass ≈ 1: $total")
   }
 
+  test("personalized PageRank on a graph with sinks: all-nodes seeds ≡ standard PageRank") {
+    import graft.operators.PageRank
+    // nodes 3 and 5 have no outbound edge, so both operators take the
+    // sentinel-group rounds that carry the dangling mass
+    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (2L, 3L), (2L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    val std = PageRank.pageRank(edges, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val pprAll = PageRank.personalizedPageRank(edges, (1L to 5L).toDF("node"), 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(pprAll === std, "teleporting to every node IS standard PageRank, sinks included")
+    val total = std.values.sum.toDouble / PageRank.MassUnit
+    assert(total > 0.99 && total <= 1.0, s"dangling mass is redistributed, not dropped: $total")
+  }
+
   test("skyline2D keeps exactly the non-dominated rows, duplicates included") {
     import graft.operators.Skyline
     val rows = Seq(

@@ -310,14 +310,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pagerank plan: keyed joins only, no cartesian or nested loop on edges") {
-    // each round ends in a lazy localCheckpoint (the round's ranks are
-    // consumed by BOTH the contribution join and the dangling-mass
-    // aggregate, and the checkpoint keeps the iterated plan from
-    // nesting), so the final executedPlan shows ONE round's shape with
-    // prior rounds behind an RDD scan: the edges⋈ranks join, the
-    // nodes⋈contribs assembly join, the ranks⋈dangling semi join — all
-    // keyed — plus exactly the two 1-row broadcast scalars (node count,
-    // dangling mass) as nested-loop attachments
     // the bench graph is sink-free, so the probe picks the pipelined
     // path: no per-round checkpoint, every round visible in ONE plan —
     // keyed joins only, nested-loop only for the 1-row scalars
@@ -333,22 +325,30 @@ class PlanSpec extends SparkSpec {
       s"expected >=${graft.Params.PrIters * 2} keyed joins (got $keyed):\n$plan")
     assert(bnlj <= graft.Params.PrIters + 1,
       s"only the 1-row scalar joins may be nested-loop (got $bnlj):\n$plan")
-    // a graph WITH sinks takes the dangling-redistribution path whose
-    // rounds normally hide behind checkpoints; unroll two rounds without
-    // them to pin that the edges⋈ranks join stays keyed there too (two
-    // keyed joins per round, nested-loop only for the two scalars/round)
-    import org.apache.spark.sql.functions.col
-    val edges = Tables.load(spark, sfDir, "orders").limit(200)
-      .select((col("o_orderkey") % 50L).as("src"), (col("o_custkey") % 50L).as("dst"))
-    val unrolled = graft.operators.PageRank.pageRank(edges, 2, checkpointRounds = false)
+    // a graph WITH sinks takes the sentinel-group path, whose rounds
+    // hide behind per-round checkpoints in a whole plan; pin one such
+    // round built on plain inputs: the ranks⋈edges flow join and the
+    // assembly join stay keyed, nested-loop only for the two 1-row
+    // scalars (teleport count, dangling mass)
+    import graft.operators.PageRank
+    val e = Tables.load(spark, sfDir, "orders").limit(200)
+      .select((col("o_orderkey") % 50L).as("src"), (col("o_custkey") % 50L).as("dst"),
+        lit(1L).as("w"))
+    val ew = e.join(e.groupBy("src").agg(sum("w").as("wsum")), "src")
+    val nodes = e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+      .distinct().withColumn("tele", lit(true))
+    val nt = nodes.agg(count(lit(1)).as("nt"))
+    val ranks = nodes.select(col("node"), lit(PageRank.MassUnit / 50).as("pr"))
+    val round = PageRank.sentinelRound(nodes, nt, PageRank.sentinelFlow(ew, ranks))
       .queryExecution.executedPlan.toString
-    assert(!unrolled.contains("CartesianProduct"),
-      s"unrolled pagerank must never plan a cartesian:\n$unrolled")
-    val uk = ("SortMergeJoin".r.findAllIn(unrolled).length
-      + "BroadcastHashJoin".r.findAllIn(unrolled).length
-      + "ShuffledHashJoin".r.findAllIn(unrolled).length)
-    assert(uk >= 4,
-      s"expected >=2 keyed joins per unrolled round (got $uk):\n$unrolled")
+    assert(!round.contains("CartesianProduct"),
+      s"a pagerank round must never plan a cartesian:\n$round")
+    val rk = ("SortMergeJoin".r.findAllIn(round).length
+      + "BroadcastHashJoin".r.findAllIn(round).length
+      + "ShuffledHashJoin".r.findAllIn(round).length)
+    assert(rk >= 2, s"expected >=2 keyed joins in a sink-path round (got $rk):\n$round")
+    val rn = "BroadcastNestedLoopJoin".r.findAllIn(round).length
+    assert(rn <= 2, s"only the two 1-row scalar joins may be nested-loop (got $rn):\n$round")
   }
 
   test("prefix-filter join plans no cartesian and verifies candidates with keyed joins") {
@@ -385,17 +385,17 @@ class PlanSpec extends SparkSpec {
 
   test("sssp round: frontier join keyed, relax min partial-aggregated, no cartesian") {
     // the production path checkpoints each round (the final plan is an
-    // RDD scan); unroll two rounds without checkpoints to pin the
-    // per-round shape, the pagerank-audit pattern
+    // RDD scan); pin one relaxation round built on plain inputs
     val edges = Tables.load(spark, sfDir, "orders").limit(200)
       .select((col("o_orderkey") % 50L).as("src"), (col("o_custkey") % 50L).as("dst"),
         (col("o_orderkey") % 5L + 1L).as("w"))
-    val seeds = Seq(0L, 1L).toDF("node")
-    val plan = graft.operators.Sssp
-      .weightedDistances(edges, seeds, 2, checkpointRounds = false)
+    val seeds = Seq(0L, 1L).toDF("node").select(col("node"), lit(0L).as("dist"))
+    val plan = graft.operators.Sssp.relax(edges, seeds, seeds)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"min-plus rounds must stay keyed equi-joins:\n$plan")
+      s"a min-plus round must stay a keyed equi-join:\n$plan")
+    assert(plan.contains("SortMergeJoin") || plan.contains("BroadcastHashJoin")
+        || plan.contains("ShuffledHashJoin"), s"the frontier join must be keyed:\n$plan")
     assert(plan.contains("partial_min"),
       s"relaxation must pre-aggregate candidate distances map-side:\n$plan")
   }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{udf, when}
 
 import graft.etl.{ImdbPipeline, Marts}
-import graft.operators.{Dedup, Joins, Msf, Similarity}
+import graft.operators.{Dedup, Joins, Msf, PageRank, Similarity, Sssp}
 
 /** The dedup pass, the ETL pipeline, the spanning forest, IVF search,
-  * the one-task marts and the salted join return the same rows when
+  * the one-task marts, the salted join, the PageRank family and weighted
+  * shortest paths return the same rows when
   * task attempts are killed and re-run: a listener kills
   * the first attempt of every 3rd task, and each operator's rows must
   * equal a clean run's. Each case also asserts that some attempt really
@@ -81,6 +82,27 @@ class RetryDeterminismSpec extends SparkSpec {
   // the same chains as a weighted graph, weights distinct per edge
   private def weightedChains = chains
     .select($"doc_a".as("src"), $"doc_b".as("dst"), ($"doc_a" * 7919L % 10007L).as("w"))
+
+  // every 10th chain node is a sink (no outbound edge)
+  private def chainEdges = chains.select($"doc_a".as("src"), $"doc_b".as("dst"))
+  private def chainSeeds = spark.range(0L, 2000L, 50L).select($"id".as("node"))
+
+  test("pageRank on a graph with sinks is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Seq(PageRank.pageRank(chainEdges, 3)))
+  }
+
+  test("pageRankWeighted is identical under killed and re-run task attempts") {
+    // pageRankWeighted takes strictly positive weights; node 0's is 0
+    sameUnderRetries(() => Seq(PageRank.pageRankWeighted(weightedChains.withColumn("w", $"w" + 1L), 3)))
+  }
+
+  test("personalizedPageRank is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Seq(PageRank.personalizedPageRank(chainEdges, chainSeeds, 3)))
+  }
+
+  test("Sssp.weightedDistances is identical under killed and re-run task attempts") {
+    sameUnderRetries(() => Seq(Sssp.weightedDistances(weightedChains, chainSeeds, 4)))
+  }
 
   test("minhashCandidates is identical under killed and re-run task attempts") {
     sameUnderRetries(() => Seq(Dedup.minhashCandidates(docs, "doc_id", "text")))

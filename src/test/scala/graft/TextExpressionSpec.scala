@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
-import graft.plans.TextExpressions
+import graft.plans.GraftExtensions
 
 /** The native graft_nfc expression must actually compose decomposed
   * sequences (not just pass strings through), be a zero-copy identity on
@@ -44,7 +44,7 @@ class TextExpressionSpec extends SparkSpec {
   }
 
   test("graft_nfc callable from SQL after registration; rejects non-string") {
-    TextExpressions.register(spark)
+    GraftExtensions.register(spark)
     val n = spark.sql(s"SELECT graft_nfc('é') AS x")
       .collect().head.getString(0)
     assert(n === "é")
@@ -82,7 +82,7 @@ class TextExpressionSpec extends SparkSpec {
       .collect().map(_.getDouble(0))
     assert(out.toSeq === cases.map(_._3))
     // null-safe and SQL-registered
-    TextExpressions.register(spark)
+    GraftExtensions.register(spark)
     assert(spark.sql("SELECT graft_jaro_winkler('martha', 'marhta') AS s")
       .collect().head.getDouble(0) > 0.96)
     val withNull = Seq((Some("x"), Option.empty[String])).toDF("a", "b")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => V}
-import graft.plans.VectorExpressions
+import graft.plans.GraftExtensions
 
 /** The native codegen'd DotProduct must be bit-identical to the HOF fold
   * (that equivalence is what keeps the DuckDB oracles valid), null-safe,
@@ -38,7 +38,7 @@ class VectorExpressionSpec extends SparkSpec {
   }
 
   test("graft_dot is callable from SQL after registration") {
-    VectorExpressions.register(spark)
+    GraftExtensions.register(spark)
     emb.createOrReplaceTempView("emb_v")
     val n = spark.sql(
       "SELECT graft_dot(embedding, embedding) AS d FROM emb_v WHERE graft_dot(embedding, embedding) > 0.5")
